@@ -1,9 +1,8 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry contract of the engine (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check; each ``queries()[name]`` compares
+against the matching ``oracle_sql()[name]`` run in DuckDB (row-count +
+schema + order-insensitive value-hash), both in registration order.
 
 All real logic lives in ``spark_streaming_invoice_anomaly_detection_spark``
 (the engine package); this module is a thin adapter.

@@ -97,7 +97,6 @@ def main() -> None:
     scaling = {"metric": "sf_scaling", "sf": sf}
     scaling.update(_sf_scaling(spark, REGISTRY, timings, sf_dir))
     print(json.dumps(scaling))
-    _archive_scaling(scaling)
 
     line = {
         "metric": "headline_queries_total_runtime",
@@ -291,30 +290,6 @@ def _time_query(spark, build, name: str, sf_dir: str, reps: int = 5):
         dt = time.perf_counter() - t0
         best = dt if best is None else min(best, dt)
     return best
-
-
-def _archive_scaling(scaling: dict, repo_root: str | None = None) -> str:
-    """Persist the sf_scaling dict to scripts/probe_results/ (r10 VERDICT
-    "missing" #3): the driver captures only the last 2000 stdout bytes, so
-    the earlier sf_scaling line never reaches BENCH_r{N}.json — without a
-    sidecar the per-round series lives nowhere. The round number is derived
-    as max(BENCH_r*.json)+1: bench runs BEFORE the driver writes the round's
-    BENCH file, so the sidecar lands under the round it will be recorded as.
-    Returns the path written (for the round-trip test)."""
-    root = repo_root or os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
-        for f in os.listdir(root)
-        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))
-    ]
-    rnd = max(rounds, default=0) + 1
-    out_dir = os.path.join(root, "scripts", "probe_results")
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, f"bench_scaling_r{rnd:02d}.json")
-    with open(path, "w") as f:
-        json.dump(scaling, f, indent=1, sort_keys=True)
-        f.write("\n")
-    return path
 
 
 def _sf_scaling(

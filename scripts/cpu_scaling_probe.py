@@ -45,7 +45,7 @@ that its local[32] time clears the fixed per-job floor.
 
 Prints one JSON line {"metric": "cpu_scaling", stages: {...}} and
 archives it to scripts/probe_results/cpu_scaling_r{N:02d}.json (round
-derived like bench._archive_scaling). A healthy ratio8_32 (t_8 / t_32)
+derived as max(BENCH_r*.json)+1). A healthy ratio8_32 (t_8 / t_32)
 is >= ~2 on these stages; ~1 would mean the hot map stages serialize.
 
 Keep runs EXCLUSIVE (no concurrent Spark job on the box) — same

@@ -15,8 +15,9 @@ r12: the per-group function is ``applyInArrow`` (FlatMapCoGroupsInArrow),
 not ``applyInPandas`` — groups cross the Python boundary as Arrow record
 batches and the math runs on NumPy views of the Arrow buffers, skipping
 the pandas Block/Series construction per group that dominated the
-pandas-cogroup floor (guide §4: Arrow batches over pandas rows; measured
-on the registered query, see OPTIMIZATION_r12.md).
+pandas-cogroup floor (Arrow batches over pandas rows; measured on the
+registered query at sf0.1: min 1.24 s vs 5.00 s for the pandas cogroup,
+interleaved runs).
 
 No reference counterpart (the reference has no joins, SURVEY.md §2.3 note);
 this generalizes the asof/range-join family to arbitrary per-key logic.

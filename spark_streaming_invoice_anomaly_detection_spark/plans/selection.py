@@ -98,7 +98,8 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     trap, word_ngrams' sibling), and per-position ``element_at`` pairs
     cost more than one linear ``zip_with`` pass. Measured on the dbc
     histogram stage at sf0.1: 1.71 s -> 0.84 s; query end-to-end
-    1.88 s -> ~1.0 s (plans/r11/dsir_importance_weights_*.txt).
+    1.82 s -> 1.07 s (plan build 1.44 s -> 0.77 s, execution
+    0.31 s both ways; 12 exchanges before and after).
     """
     b_ = _DSIR_BUCKETS
     docs = spread_if_narrow(

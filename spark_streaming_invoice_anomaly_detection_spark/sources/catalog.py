@@ -23,27 +23,30 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 #: the same truncation DuckDB applies when casting TIMESTAMP_NS to TIMESTAMP.
 _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
-#: Session-scoped table-HANDLE cache (r11 optimization round): the lazy
-#: DataFrame returned by ``spark.read.parquet`` + the nanos/NTZ fixups,
-#: keyed by (applicationId, resolved sf_dir, table). This memoizes the
-#: DATASOURCE RESOLUTION ONLY — file listing, footer schema read, and the
-#: ~69 ms of py4j round-trips each ``load_table`` call paid — exactly what
-#: a real deployment's catalog (metastore/Iceberg) amortizes for every
-#: query. No data is cached: every action on the returned frame re-scans
-#: the parquet bytes (DataFrames are immutable, so sharing the handle is
-#: safe). Measured effect at sf0.1: join_five_way_volume build time
-#: 0.52 s -> 0.11 s (6 tables), top_returning_customers 0.36 s -> 0.08 s.
-#: Keyed by applicationId, not id(spark): Python ids are reused after GC
-#: across the many short-lived test sessions. Entries from OTHER
-#: applications are evicted on insert (see load_table), so the dict is
-#: bounded by one application's (sf_dir, table) working set.
+#: Session-scoped table-HANDLE cache: the lazy DataFrame returned by
+#: ``spark.read.parquet`` + the nanos/NTZ fixups, keyed by (resolved sf_dir,
+#: table). This memoizes the DATASOURCE RESOLUTION ONLY — file listing,
+#: footer schema read, and the ~69 ms of py4j round-trips each
+#: ``load_table`` call paid — exactly what a real deployment's catalog
+#: (metastore/Iceberg) amortizes for every query. No data is cached: every
+#: action on the returned frame re-scans the parquet bytes (DataFrames are
+#: immutable, so sharing the handle is safe). Measured effect at sf0.1:
+#: join_five_way_volume build time 0.52 s -> 0.11 s (6 tables),
+#: top_returning_customers 0.36 s -> 0.08 s.
+#:
+#: The whole dict belongs to ONE application, ``_TABLE_CACHE_APP``
+#: (applicationId, not id(spark): Python ids are reused after GC across
+#: short-lived sessions). ``load_table`` clears it when the live
+#: application differs, so handles bound to a stopped session are never
+#: returned and never pinned.
 #:
 #: SHARED-HANDLE CONTRACT: the memoized DataFrame is the same object for
 #: every consumer — never ``.cache()``/``.persist()`` a handle returned by
 #: ``load_table`` (it would silently pin cached data for every other query
 #: in the session; pinned by tests/test_r12_optimizations.py). Persist a
 #: derived frame (``df.select(...)``) instead.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+_TABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
+_TABLE_CACHE_APP: str | None = None
 
 
 def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
@@ -53,21 +56,20 @@ def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Load one test table. Schema comes from the parquet footer (exact).
 
-    The resolved handle is memoized per (session, sf_dir, table) — see
-    ``_TABLE_CACHE``; pure plan-object reuse, no data caching.
+    The resolved handle is memoized per (sf_dir, table) for the live
+    application — see ``_TABLE_CACHE``; pure plan-object reuse, no data
+    caching.
     """
+    global _TABLE_CACHE_APP
     sf_dir = sf_dir or sf_dir_from_env()
     app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, name)
+    if app_id != _TABLE_CACHE_APP:
+        _TABLE_CACHE.clear()
+        _TABLE_CACHE_APP = app_id
+    key = (sf_dir, name)
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached
-    # Evict entries from other applications on insert (r11 ADVICE): keys
-    # from stopped sessions would otherwise pin py4j DataFrame references
-    # forever across long multi-session test runs. One application's
-    # handles (all sf_dirs) stay cached for its lifetime.
-    for stale in [k for k in _TABLE_CACHE if k[0] != app_id]:
-        del _TABLE_CACHE[stale]
     if name in _NANOS_TS_COLS:
         # runtime-settable SQLConf; required before the scan is planned
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -79,23 +79,3 @@ def test_final_line_budget_at_current_query_count():
         "longer fits the driver's 2000-byte tail capture — move a key to "
         "its own earlier print (like sf_scaling) or trim the headline set"
     )
-
-
-def test_archive_scaling_round_trips(tmp_path):
-    """_archive_scaling (r10 VERDICT "missing" #3) writes the sf_scaling
-    dict to scripts/probe_results/bench_scaling_r{N}.json where N is
-    max(BENCH_r*.json)+1 — bench runs before the driver stamps the round's
-    BENCH file, so the sidecar lands under the round it belongs to."""
-    import bench
-
-    (tmp_path / "BENCH_r07.json").write_text("{}")
-    (tmp_path / "BENCH_r10.json").write_text("{}")
-    payload = {"metric": "sf_scaling", "sf": 0.1, "q1": {"x10": 3.2}}
-    path = bench._archive_scaling(dict(payload), repo_root=str(tmp_path))
-    assert path.endswith(os.path.join("probe_results", "bench_scaling_r11.json"))
-    assert json.loads(open(path).read()) == payload
-    # no BENCH files at all -> r01 (fresh checkout)
-    empty = tmp_path / "fresh"
-    empty.mkdir()
-    p2 = bench._archive_scaling(dict(payload), repo_root=str(empty))
-    assert p2.endswith("bench_scaling_r01.json")

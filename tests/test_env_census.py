@@ -42,7 +42,6 @@ def test_census_table_parses():
         "spark-avro external module",
         "spark-sql-kafka connector jar",
         "Kafka broker at localhost:9092",
-        "google.protobuf (transformWithState wire protocol)",
     }
 
 
@@ -66,12 +65,3 @@ def test_kafka_census_current(spark):
     assert rows["Kafka broker at localhost:9092"] == _status(
         _broker_reachable()
     )
-
-
-def test_protobuf_census_current():
-    from .test_streaming_v2 import _protobuf_available
-
-    documented = _census_rows()[
-        "google.protobuf (transformWithState wire protocol)"
-    ]
-    assert documented == _status(_protobuf_available())

@@ -6,6 +6,7 @@ import pytest
 
 from spark_streaming_invoice_anomaly_detection_spark.plans.registry import (
     REGISTRY,
+    oracle_sql,
     queries,
 )
 
@@ -37,6 +38,14 @@ def test_query_matches_oracle(spark, sf_dir, con, name):
 
 
 ROWS_ONLY_NAMES = [n for n, s in REGISTRY.items() if s.oracle is None]
+
+
+def test_queries_and_oracles_follow_registration_order():
+    """queries() and oracle_sql() return REGISTRY insertion order;
+    oracle_sql() omits exactly the rows-only entries."""
+    assert list(queries()) == list(REGISTRY)
+    assert list(oracle_sql()) == ORACLE_NAMES
+
 
 #: Training queries run the full MLlib sweep at BUILD time (.fit before a
 #: DataFrame exists), so reading .schema would train both models per pytest

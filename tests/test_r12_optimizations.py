@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import random
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_streaming_invoice_anomaly_detection_spark.operators.graph import (
@@ -304,14 +305,19 @@ class TestQualityScoreAlnumRewrite:
 
 
 class TestTableCacheEviction:
-    def test_other_application_keys_evicted_on_insert(self, spark, sf_dir):
-        stale_key = ("app-from-a-stopped-session", sf_dir, "orders")
-        catalog._TABLE_CACHE[stale_key] = "sentinel"
+    def test_stale_application_cache_cleared_on_load(
+        self, spark, sf_dir, monkeypatch
+    ):
+        """Handles cached under another application are never returned:
+        the first load under the live application clears them, and the
+        fresh handle is then memoized."""
+        key = (sf_dir, "orders")
+        monkeypatch.setattr(catalog, "_TABLE_CACHE_APP", "app-of-a-stopped-session")
+        monkeypatch.setattr(catalog, "_TABLE_CACHE", {key: "sentinel"})
         df = catalog.load_table(spark, "orders", sf_dir)
-        assert stale_key not in catalog._TABLE_CACHE
-        app_id = spark.sparkContext.applicationId
-        assert all(k[0] == app_id for k in catalog._TABLE_CACHE)
-        # and the fresh handle is memoized under the live application
+        assert isinstance(df, DataFrame)
+        assert list(catalog._TABLE_CACHE) == [key]
+        assert catalog._TABLE_CACHE_APP == spark.sparkContext.applicationId
         assert catalog.load_table(spark, "orders", sf_dir) is df
 
     def test_shared_handle_not_cached(self, spark, sf_dir):

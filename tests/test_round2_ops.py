@@ -240,68 +240,3 @@ class TestArrowTextStatsUnicode:
         for i, t in enumerate(texts):
             assert con.execute("SELECT length(?)", [t]).fetchone()[0] == want_py[i]
 
-
-class TestRegistryRotation:
-    def test_failed_then_unchecked_then_green(self):
-        """The driver walks queries() in order under a wall-clock budget;
-        the rotation contract (derived entirely from parsed CORRECTNESS
-        files, round-3 VERDICT #1/#2): latest-row-failed queries first,
-        then changed-since-green (r8), then AT-RISK greens (r9 VERDICT
-        #2: a green whose verification age at the next judging is within
-        one round of the staleness SLA is promoted AHEAD of new
-        never-checked registrations — the new ones have no deadline, the
-        stale cohort does), then never-checked, then the remaining
-        greens oldest-round-first. This tier model only diverges from
-        the old failed/never/green 3-tier one in rounds where BOTH the
-        at-risk and never tiers are simultaneously non-empty (first hit
-        r11: the r6 cohort aged into at-risk while the round registered
-        new queries)."""
-        from spark_streaming_invoice_anomaly_detection_spark.plans.registry import (
-            _DRIVER_HISTORY,
-            changed_since_verification,
-            max_age_rounds,
-            queries,
-        )
-
-        names = list(queries())
-        hist = _DRIVER_HISTORY
-        changed = changed_since_verification()
-        newest = max((rnd for rnd, _ok in hist.values()), default=0)
-        threshold = max_age_rounds() - 1
-
-        def tier(n):
-            if n in hist and n not in changed and not hist[n][1]:
-                return 0  # failed-latest
-            if n in hist and n in changed:
-                return 1  # changed-since-green
-            if n in hist and newest + 1 - hist[n][0] >= threshold:
-                return 2  # at-risk green (promoted ahead of never)
-            if n not in hist:
-                return 3  # never driver-checked
-            return 4  # green, inside the SLA
-
-        tiers = [tier(n) for n in names]
-        assert tiers == sorted(tiers), (
-            "order must be failed, changed, at-risk green, never, green"
-        )
-        green = [n for n in names if tier(n) in (2, 4)]
-        rounds = [hist[n][0] for n in green]
-        assert rounds == sorted(rounds), "green tiers must be oldest-round-first"
-
-    def test_history_parses_pass_fail(self):
-        """A row with any *_match False or a real err counts as failed;
-        rows-only no_oracle rows with a row count count as passed."""
-        from spark_streaming_invoice_anomaly_detection_spark.plans.registry import (
-            _DRIVER_HISTORY,
-        )
-
-        hist = _DRIVER_HISTORY
-        if "multimodal_decode_stats" in hist:
-            rnd, ok = hist["multimodal_decode_stats"]
-            # r1 hash-fail is its only driver row until a re-check lands;
-            # once a newer green row exists this branch flips with it.
-            assert ok == (rnd > 1)
-        if "kmeans_invoice_anomalies" in hist:
-            assert hist["kmeans_invoice_anomalies"][1], (
-                "rows-only no_oracle rows with spark_rows must parse as pass"
-            )
