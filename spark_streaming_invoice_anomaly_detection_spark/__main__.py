@@ -58,7 +58,9 @@ def _cmd_train(args: argparse.Namespace) -> int:
         )
     )
     # no spark.stop(): getOrCreate may have joined a caller's session (the
-    # in-process test harness does exactly that); process exit cleans up
+    # in-process test harness does exactly that), so release the cached
+    # features here instead of leaving them in that session
+    feats.unpersist()
     return 0
 
 

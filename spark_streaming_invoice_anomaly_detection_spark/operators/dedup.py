@@ -294,7 +294,6 @@ def minhash_near_dups(
     num_hashes: int = 8,
     bands: int = 4,
     threshold: float = 0.5,
-    cache_shingles: bool = True,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle -> sign -> band-join ->
@@ -305,10 +304,10 @@ def minhash_near_dups(
     recall at J=0.5 and >95% at J=0.8; raise num_hashes/bands for recall,
     verification keeps precision exact.
 
-    ``cache_shingles`` persists (MEMORY_AND_DISK, eager) the shingled
-    frame, which the plan reads three times (signatures + both verify
-    sides) — measured 2x end-to-end. Tokenize/ngram recompute is the
-    alternative at cluster scale if shingle storage exceeds the cache.
+    The shingled frame is read three times (signatures + both verify
+    sides), so it is materialized once with an eager ``localCheckpoint``
+    (measured 2x end-to-end against recompute); unlike a persist it
+    leaves no CacheManager entry for the caller to release.
 
     ``max_bucket`` caps band-bucket size before the candidate self-join —
     the lever that keeps boilerplate clusters from turning quadratic at
@@ -334,23 +333,16 @@ def minhash_near_dups(
     # the projection re-evaluated the whole shingle expression in an
     # interpreted (non-codegen) Filter: measured 54 s vs 5 s for the
     # identical stage on the x10 scale corpus. (r11 probe: moving the
-    # filter AFTER the persist to drop the prefilter's second tokenize
-    # measured 1.517 s vs 1.527 s end-to-end at sf0.1 — codegen already
-    # de-duplicates the two tokenize evaluations within the fill stage,
-    # so the r7 shape is kept.)
+    # filter AFTER the materialization to drop the prefilter's second
+    # tokenize measured 1.517 s vs 1.527 s end-to-end at sf0.1 — codegen
+    # already de-duplicates the two tokenize evaluations within the fill
+    # stage, so the r7 shape is kept.)
     shingled = shingle_docs(
         df.filter(F.size(tokenize(F.col(text_col))) >= F.lit(ngram)),
         text_col,
         id_col,
         ngram,
-    )
-    if cache_shingles:
-        from pyspark import StorageLevel
-
-        # eager: a lazy persist lets the three consumer stages race the
-        # first block writes and recompute anyway
-        shingled = shingled.persist(StorageLevel.MEMORY_AND_DISK)
-        shingled.count()
+    ).localCheckpoint()
     signed = shingled.select(
         id_col, minhash_signature(F.col("shingles"), num_hashes).alias("signature")
     )

@@ -170,30 +170,19 @@ _MH_K, _MH_BANDS, _MH_NGRAM, _MH_THRESHOLD = 8, 4, 3, 0.3
 #: oracle as a HAVING over the identical band hashes.
 _MH_MAX_BUCKET = 512
 
-#: Near-dup pair graph cache, keyed by (session id, sf_dir): four queries
-#: (pairs, components, keep-best, PageRank) consume the SAME pipeline, so
-#: one persisted materialization serves all — the cross-query analogue of
-#: the shingle cache inside minhash_near_dups, and the fix-class for the
-#: r1 driver-time-budget starvation. A fresh session just repopulates.
-_PAIRS_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-#: Degree-joined PageRank edge list, same keying/lifecycle as _PAIRS_CACHE.
-_PR_EDGES_CACHE: dict[tuple[int, str], DataFrame] = {}
-
 
 def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _PAIRS_CACHE:
-        pairs = D.minhash_near_dups(
-            _augmented_docs(spark, sf_dir),
-            ngram=_MH_NGRAM,
-            num_hashes=_MH_K,
-            bands=_MH_BANDS,
-            threshold=_MH_THRESHOLD,
-            max_bucket=_MH_MAX_BUCKET,
-        ).persist()
-        _PAIRS_CACHE[key] = pairs
-    return _PAIRS_CACHE[key]
+    """The near-dup pair graph the LSH family shares (pairs, components,
+    keep-best, PageRank, triangles, contamination). Built per query:
+    consumers that re-read it materialize it themselves."""
+    return D.minhash_near_dups(
+        _augmented_docs(spark, sf_dir),
+        ngram=_MH_NGRAM,
+        num_hashes=_MH_K,
+        bands=_MH_BANDS,
+        threshold=_MH_THRESHOLD,
+        max_bucket=_MH_MAX_BUCKET,
+    )
 
 
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1906,14 +1895,9 @@ def q_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     outdeg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     # The LSH candidate pipeline above is a deep subtree; unrolled 3x it
     # would be re-derived per iteration (exchange reuse does not reach
-    # across the rank-join boundary). One persisted edge list caps it at
-    # one computation; MEMOIZED per (session, sf_dir) like _PAIRS_CACHE —
-    # a bare per-call persist() would leak a CacheManager entry on every
-    # invocation of the query in a long-lived session.
-    ed_key = (id(spark), sf_dir)
-    if ed_key not in _PR_EDGES_CACHE:
-        _PR_EDGES_CACHE[ed_key] = edges.join(outdeg, "u").persist()
-    ed = _PR_EDGES_CACHE[ed_key]
+    # across the rank-join boundary). One checkpointed edge list caps it
+    # at one computation and leaves no CacheManager entry behind.
+    ed = edges.join(outdeg, "u").localCheckpoint()
 
     n_docs = load_table(spark, "documents", sf_dir).count()  # tiny scalar
     big_n = 2 * n_docs
@@ -4061,11 +4045,6 @@ register(
 _MMR_LAMBDA = 0.7
 _MMR_K = 5
 
-#: Memoized top-m candidate pool, keyed/lifecycled like _PAIRS_CACHE so
-#: repeated builder invocations in one session reuse one persisted 25-row
-#: frame instead of leaking a new cache entry each call.
-_MMR_POOL_CACHE: dict[tuple[int, str], DataFrame] = {}
-
 
 def _cos_sql(a: str, b: str) -> str:
     """DuckDB cosine matching operators/dedup.py:cosine bit-for-bit
@@ -4087,27 +4066,24 @@ def q_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the corpus-sized work is exactly the brute-force top-m
     scan (TakeOrdered, no shuffle of the full set); the greedy loop runs
-    k−1 single-row argmax jobs over the CACHED 25-row pool, each step
-    inlining the winner's embedding as literals (the repo's accepted
+    k−1 single-row argmax jobs over the CHECKPOINTED 25-row pool, each
+    step inlining the winner's embedding as literals (the repo's accepted
     1-row tiny-scalar collect idiom — bounded by k·m at ANY corpus size,
     never by the data). Scores are fixed-order IEEE expressions on
     bit-identical cosines, so the oracle (same greedy unrolled as k CTE
     stages) reproduces every pick exactly.
     """
-    key = (id(spark), sf_dir)
-    if key not in _MMR_POOL_CACHE:
-        emb = load_table(spark, "embeddings", sf_dir)
-        _MMR_POOL_CACHE[key] = (
-            emb.select(
-                "vec_id",
-                "embedding",
-                S.cosine_to_query("embedding", QUERY_VEC).alias("rel"),
-            )
-            .orderBy(F.desc("rel"), F.asc("vec_id"))
-            .limit(_TOPK)
-            .persist()
+    cand = (
+        load_table(spark, "embeddings", sf_dir)
+        .select(
+            "vec_id",
+            "embedding",
+            S.cosine_to_query("embedding", QUERY_VEC).alias("rel"),
         )
-    cand = _MMR_POOL_CACHE[key]
+        .orderBy(F.desc("rel"), F.asc("vec_id"))
+        .limit(_TOPK)
+        .localCheckpoint()
+    )
     lam, div = F.lit(_MMR_LAMBDA), F.lit(1.0 - _MMR_LAMBDA)
 
     from ..operators.dedup import cosine
@@ -4222,7 +4198,7 @@ def q_neardup_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     families (cliques), which decide whether keep-one-per-component or
     keep-one-per-clique is the right dedup policy.
 
-    Scale shape: the corpus-sized work is the (memoized) banded-LSH pair
+    Scale shape: the corpus-sized work is the banded-LSH pair
     generation; everything here runs on the EDGE LIST, orders of
     magnitude smaller. Triangles come from the canonical u<v<w two-hop
     join (each triangle counted once), wedges from per-node degrees —
@@ -4232,16 +4208,23 @@ def q_neardup_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint truncates the LSH pipeline's lineage (the
     # contamination_closure idiom): the triangle self-joins then plan
     # against a materialized edge table instead of replaying the pair
-    # generation per join arm — 26 shuffles down to 4.
-    pairs = _near_dup_pairs(spark, sf_dir)
-    e = (
-        pairs.select(
-            F.least("id_a", "id_b").alias("u"),
-            F.greatest("id_a", "id_b").alias("v"),
+    # generation per join arm — 26 shuffles down to 4. The checkpoint
+    # inherits its size estimate from the plan it came from: reading the
+    # pairs through a filled cache hands the planner their measured
+    # (small) size, so the self-joins broadcast — 2 exchanges instead of
+    # 6 against the raw LSH plan's estimate.
+    pairs = _near_dup_pairs(spark, sf_dir).persist()
+    try:
+        e = (
+            pairs.select(
+                F.least("id_a", "id_b").alias("u"),
+                F.greatest("id_a", "id_b").alias("v"),
+            )
+            .distinct()
+            .localCheckpoint()
         )
-        .distinct()
-        .localCheckpoint()
-    )
+    finally:
+        pairs.unpersist()
     n_edges = e.agg(F.count(F.lit(1)).alias("n_edges"))
     nodes = (
         e.select(F.col("u").alias("node"))

@@ -142,31 +142,6 @@ register(
 # ---------------------------------------------------------------------------
 
 
-#: Featurized+assembled frame shared by the two training queries — the
-#: sweep input is identical for both algorithms, so materialize it once per
-#: (session, sf_dir) instead of re-running the lineitem aggregation.
-#: Keyed by session id: a fresh driver session just repopulates.
-_FEATS_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
-def _cached_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _FEATS_CACHE:
-        from ..ml.clustering import assemble_features
-
-        # The featurized frame is small relative to the lineitem input (one
-        # row per invoice); iterative fitting over many near-empty shuffle
-        # partitions is pure scheduling overhead, so coalesce before the
-        # sweep. At real scale the same rule applies with a larger target
-        # (rows per partition, not partition count, is the invariant).
-        _FEATS_CACHE[key] = (
-            assemble_features(_featurize(spark, sf_dir), _FEATS)
-            .coalesce(8)
-            .persist()
-        )
-    return _FEATS_CACHE[key]
-
-
 #: Fixed output projection of both training queries: three scalar columns
 #: (string invoice key, int cluster id, double distance). The rows-only
 #: canonicalizable test pins against this constant instead of training two
@@ -176,12 +151,24 @@ ANOMALY_OUTPUT_COLUMNS = ("invoice_no", "cluster", "dist")
 
 def _train_and_flag(spark: SparkSession, sf_dir: str, algo: str) -> DataFrame:
     from ..ml.clustering import (
+        assemble_features,
         detect_anomalies,
         distance_to_centroid,
         train_detector,
     )
 
-    feats = _cached_features(spark, sf_dir)
+    # The featurized frame is small relative to the lineitem input (one
+    # row per invoice); iterative fitting over many near-empty shuffle
+    # partitions is pure scheduling overhead, so coalesce before the
+    # sweep. At real scale the same rule applies with a larger target
+    # (rows per partition, not partition count, is the invariant). The
+    # checkpoint serves the sweep and the scoring pass from one
+    # lineitem aggregation.
+    feats = (
+        assemble_features(_featurize(spark, sf_dir), _FEATS)
+        .coalesce(8)
+        .localCheckpoint()
+    )
     # k swept 1..5 (reference uses 1..20; shortened for per-round runtime —
     # the elbow lands at k<=3 on this data, so the sweep tail is dead work
     # under the driver's wall-clock budget), seeded for reproducibility.

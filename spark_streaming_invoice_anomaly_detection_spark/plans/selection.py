@@ -1476,7 +1476,7 @@ def q_eval_train_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction and the detector's recall on the leak path gets
     externally verified numbers, not an assumed 0.
 
-    Plan: the (session-cached) LSH pair frame is filtered down with one
+    Plan: the LSH pair frame is filtered down with one
     semi-join + one anti-join per side against the eval membership —
     eval is ~2% of the corpus, so these are key-only shuffle joins, no
     broadcast of corpus-scale state; the census is a 20-group agg. At

@@ -35,8 +35,8 @@ _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 #: top_returning_customers 0.36 s -> 0.08 s.
 #:
 #: The whole dict belongs to ONE application, ``_TABLE_CACHE_APP``
-#: (applicationId, not id(spark): Python ids are reused after GC across
-#: short-lived sessions). ``load_table`` clears it when the live
+#: (applicationId, not the session object's Python id: ids are reused
+#: after GC across short-lived sessions). ``load_table`` clears it when the live
 #: application differs, so handles bound to a stopped session are never
 #: returned and never pinned.
 #:

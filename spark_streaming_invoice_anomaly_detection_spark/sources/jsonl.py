@@ -83,9 +83,11 @@ def read_jsonl(
 
 
 def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(good, corrupt) split of a ``keep_corrupt`` read. Spark requires
-    caching before referencing _corrupt_record in a filter — handled here."""
-    df = df.cache()
+    """(good, corrupt) split of a ``keep_corrupt`` read. Spark refuses a
+    raw file scan that references only _corrupt_record, so the read is
+    materialized first — with a checkpoint, which is not a file scan and
+    leaves no CacheManager entry behind."""
+    df = df.localCheckpoint()
     good = df.filter(F.col("_corrupt_record").isNull()).drop(
         "_corrupt_record"
     )

@@ -149,7 +149,6 @@ def test_end_to_end_near_dups_lose_the_cluster_under_cap(corpus):
     kw = dict(
         text_col="text", id_col="doc_id", ngram=NGRAM,
         num_hashes=NUM_HASHES, bands=BANDS, threshold=0.99,
-        cache_shingles=False,
     )
     uncapped = _pairs(D.minhash_near_dups(corpus, **kw, max_bucket=None))
     capped = _pairs(D.minhash_near_dups(corpus, **kw, max_bucket=CAP))

@@ -18,8 +18,10 @@ from spark_streaming_invoice_anomaly_detection_spark.ml.clustering import (
     train_detector,
 )
 from spark_streaming_invoice_anomaly_detection_spark.plans.ml_queries import (
+    ANOMALY_OUTPUT_COLUMNS,
     _FEATS,
     _featurize,
+    q_kmeans_anomalies,
 )
 
 
@@ -95,3 +97,13 @@ def test_bisecting_trains(spark, features):
     )
     assert len(costs) == 3
     assert threshold > 0
+
+
+def test_training_query_output_and_no_cache_left(spark, sf_dir):
+    """The registered training flow (shared by both training queries)
+    returns the fixed anomaly projection and releases what it persists."""
+    spark.catalog.clearCache()
+    out = q_kmeans_anomalies(spark, sf_dir)
+    assert tuple(out.columns) == ANOMALY_OUTPUT_COLUMNS
+    assert out.count() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -289,27 +289,20 @@ def test_registry_plan_hygiene(spark, sf_dir):
     scale-killers: CartesianProduct, row-at-a-time Python (BatchEvalPython),
     and runaway shuffle counts. Iterative algorithms that legitimately
     shuffle per iteration are allowlisted with their reason."""
-    import bench
     from spark_streaming_invoice_anomaly_detection_spark.plans.registry import (
         REGISTRY,
         queries,
     )
 
     queries()
-    # The memoized pair frames (plans/extensions.py _PAIRS_CACHE) are shared
-    # objects: once an earlier test has executed one, its plan string holds
-    # the AQE final plan AND the initial plan, so each exchange counts
-    # twice. Drop the memos so every query is judged on a freshly built
-    # plan, whichever tests ran before.
-    bench._reset_pairs_cache()
     # fixed-iteration label propagation: one shuffle per iteration by design
     shuffle_allow = {"pagerank_neardup_graph"}
     # pipeline composition, not a runaway: the eval-decontamination audit
-    # joins the (persisted) LSH pair frame against the ~2% eval membership
-    # on both pair sides — two int64-keyed joins (4 exchanges), a
+    # joins the LSH pair frame against the ~2% eval membership on both
+    # pair sides — two int64-keyed joins (4 exchanges), a
     # countDistinct two-phase agg, and two 20-group census aggs. Every
     # exchange carries ids or 20-row aggregates; the corpus-scale work
-    # lives behind the memoized pair frame, same as the graph family.
+    # lives in the LSH pair pipeline, same as the graph family.
     shuffle_allow.add("eval_train_contamination")
     # same composition argument: the recall matrix joins planted pairs
     # against the checkpointed LSH output (2 exchanges), the bucket-size

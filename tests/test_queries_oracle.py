@@ -31,9 +31,15 @@ def con(sf_dir):
 @pytest.mark.parametrize("name", ORACLE_NAMES)
 def test_query_matches_oracle(spark, sf_dir, con, name):
     spec = REGISTRY[name]
+    spark.catalog.clearCache()
     df = spec.spark(spark, sf_dir)
     assert_matches_oracle(
         df, con, spec.oracle, name=name, allow_empty=name in EMPTY_OK
+    )
+    # builders release what they persist: a query run leaves no
+    # CacheManager entry behind in the caller's session
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"[{name}] left an entry in Spark's CacheManager"
     )
 
 

@@ -310,12 +310,15 @@ class TestCorruptJsonl:
         df = read_jsonl(
             spark, str(p), schema="doc_id long, text string", keep_corrupt=True
         )
+        spark.catalog.clearCache()
         good, bad = split_corrupt(df)
         ids = sorted(r.doc_id for r in good.collect())
         assert ids == [1, 2]
         corrupt = [r._corrupt_record for r in bad.collect()]
         assert len(corrupt) == 2  # syntax error + type mismatch
         assert any("broken" in c for c in corrupt)
+        # the split materializes without a cache the caller must release
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     def test_requires_schema(self, spark, tmp_path):
         from spark_streaming_invoice_anomaly_detection_spark.sources.jsonl import (
