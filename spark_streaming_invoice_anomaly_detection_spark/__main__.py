@@ -26,7 +26,12 @@ import sys
 
 
 def _cmd_train(args: argparse.Namespace) -> int:
-    from .ml.clustering import Detector, save_detector, train_detector
+    from .ml.clustering import (
+        Detector,
+        assemble_features,
+        save_detector,
+        train_detector,
+    )
     from .session import get_spark
     from .sources.csv_batch import load_and_featurize_training_csv
 
@@ -34,18 +39,22 @@ def _cmd_train(args: argparse.Namespace) -> int:
     feats = load_and_featurize_training_csv(
         spark, args.training_csv, infer_schema=args.infer_schema
     ).persist()
-    from .ml.clustering import assemble_features
-
-    assembled = assemble_features(
-        feats,
-        ["avg_unit_price", "min_unit_price", "max_unit_price", "time", "number_items"],
-    )
-    model, threshold, costs = train_detector(
-        assembled,
-        algo=args.algo,
-        k_range=range(1, args.max_k + 1),
-        threshold_k=args.threshold_k,
-    )
+    # no spark.stop(): getOrCreate may have joined a caller's session (the
+    # in-process test harness does exactly that), so release the cached
+    # features here, on failure too, instead of leaving them in that session
+    try:
+        assembled = assemble_features(
+            feats,
+            ["avg_unit_price", "min_unit_price", "max_unit_price", "time", "number_items"],
+        )
+        model, threshold, costs = train_detector(
+            assembled,
+            algo=args.algo,
+            k_range=range(1, args.max_k + 1),
+            threshold_k=args.threshold_k,
+        )
+    finally:
+        feats.unpersist()
     save_detector(
         Detector(model=model, threshold=threshold, algo=args.algo), args.out_dir
     )
@@ -57,10 +66,6 @@ def _cmd_train(args: argparse.Namespace) -> int:
             {"algo": args.algo, "k": model.getK(), "threshold": threshold}
         )
     )
-    # no spark.stop(): getOrCreate may have joined a caller's session (the
-    # in-process test harness does exactly that), so release the cached
-    # features here instead of leaving them in that session
-    feats.unpersist()
     return 0
 
 

@@ -104,22 +104,24 @@ def train_sweep(
     if owns_cache:
         features = features.persist()
     models, costs = [], []
-    for k in k_range:
-        if k == 1:
-            models.append(None)
-            costs.append(_single_cluster_cost(features, features_col))
-            continue
-        if algo == "kmeans":
-            est = KMeans(k=k, seed=seed, featuresCol=features_col)
-        elif algo == "bisecting":
-            est = BisectingKMeans(k=k, seed=seed, featuresCol=features_col)
-        else:
-            raise ValueError(f"unknown algo: {algo}")
-        model = est.fit(features)
-        models.append(model)
-        costs.append(float(model.summary.trainingCost))
-    if owns_cache:
-        features.unpersist()
+    try:
+        for k in k_range:
+            if k == 1:
+                models.append(None)
+                costs.append(_single_cluster_cost(features, features_col))
+                continue
+            if algo == "kmeans":
+                est = KMeans(k=k, seed=seed, featuresCol=features_col)
+            elif algo == "bisecting":
+                est = BisectingKMeans(k=k, seed=seed, featuresCol=features_col)
+            else:
+                raise ValueError(f"unknown algo: {algo}")
+            model = est.fit(features)
+            models.append(model)
+            costs.append(float(model.summary.trainingCost))
+    finally:
+        if owns_cache:
+            features.unpersist()
     return models, costs
 
 

@@ -77,8 +77,8 @@ def connected_components(
       :func:`_cc_propagation`), keeping the labels already computed as
       shortcut edges.
 
-    Crossover (round-7 VERDICT ask #5; x10/x100 measured on the
-    constant-dup-density scale probe, ``scripts/scale_probe.py``):
+    Crossover (x10/x100 measured on a sf0.1 corpus replicated at constant
+    duplicate density):
 
     ==============================  ======================  =============
     topology                        propagation             star
@@ -142,95 +142,96 @@ def _cc_propagation(
         .distinct()
         .persist()
     )
-    labels = (
-        edges.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .localCheckpoint()
-    )
-    # Round 1's frontier is every node (everyone announces its own label);
-    # afterwards only nodes whose label just dropped re-announce. Any
-    # neighbor that did NOT change this round already announced its
-    # current label in an earlier round, so skipping it loses nothing.
-    frontier = labels
-    history: list[int] = []
-    for _round in range(max_iter):
-        if _round == 0:
-            # Round 1 shortcut (r11 optimization round): every node's
-            # label IS its id (comp(v) = v), so joining edges to the
-            # all-nodes frontier is an identity join — min(comp(v)) over
-            # neighbors is just min(v). Skipping the join removes the
-            # labels-side shuffle from the one round that always touches
-            # the FULL edge set (later frontiers collapse), at every
-            # scale. Same aggregation result by construction; fixpoint
-            # parity with star/union-find stays pinned in
-            # tests/test_graph.py.
-            nbr_min = edges.groupBy("u").agg(
-                F.min("v").alias("nbr_comp")
-            )
-        else:
-            nbr_min = (
-                edges.join(frontier, edges.v == frontier.node)
-                .groupBy("u")
-                .agg(F.min("comp").alias("nbr_comp"))
-            )
-        # The convergence flag is FUSED into the propagation projection:
-        # detecting "did any label change" is then a predicate scan of the
-        # frame we just checkpointed anyway, not (as a naive loop writes
-        # it) a second old-vs-new join — one fewer shuffle per round. The
-        # changed COUNT is fused further (r12): an observed metric on the
-        # checkpointed plan is computed DURING the checkpoint
-        # materialization, so each round is ONE job instead of
-        # checkpoint + count (the accumulator-in-the-checkpoint-job fusion
-        # r11 left open; measured min 2.27 s vs 2.68 s / median 2.58 vs
-        # 3.30 on the sf0.1 LSH graph, faster on 6 of 6 interleaved
-        # alternations). Both modes now read the exact count for free, so
-        # the stall probe no longer costs an extra aggregation.
-        new_comp = F.least(
-            F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
-        )
-        obs = Observation(f"cc_changed_{uuid.uuid4().hex}")
-        new_labels = (
-            labels.join(nbr_min, labels.node == nbr_min.u, "left")
-            .select(
-                "node",
-                new_comp.alias("comp"),
-                (new_comp < F.col("comp")).alias("changed"),
-            )
-            .observe(obs, F.count_if(F.col("changed")).alias("n_changed"))
+    try:
+        labels = (
+            edges.select(F.col("u").alias("node"))
+            .distinct()
+            .withColumn("comp", F.col("node"))
             .localCheckpoint()
         )
-        changed = obs.get["n_changed"]
-        # Both views are filters over the frame just checkpointed — no
-        # recomputation, and the frontier's runtime row count is visible
-        # to AQE for the next round's join-strategy choice.
-        frontier = new_labels.filter("changed").drop("changed")
-        labels = new_labels.drop("changed")
-        if changed == 0:
-            edges.unpersist()
-            return labels
-        history.append(changed)
-        if (
-            star_on_stall
-            and len(history) >= 3
-            and history[-1] * 2 > history[-3]
-        ):
-            # Frontier stalled (long-chain signature: ~one hop per round).
-            # Hand the remaining work to the O(log n) star scheme, seeded
-            # with the labels already propagated as shortcut edges.
-            _LAST_AUTO_SWITCHED = True
-            shortcuts = labels.filter(F.col("comp") != F.col("node")).select(
-                F.col("node").alias("u"), F.col("comp").alias("v")
+        # Round 1's frontier is every node (everyone announces its own label);
+        # afterwards only nodes whose label just dropped re-announce. Any
+        # neighbor that did NOT change this round already announced its
+        # current label in an earlier round, so skipping it loses nothing.
+        frontier = labels
+        history: list[int] = []
+        for _round in range(max_iter):
+            if _round == 0:
+                # Round 1 shortcut (r11 optimization round): every node's
+                # label IS its id (comp(v) = v), so joining edges to the
+                # all-nodes frontier is an identity join — min(comp(v)) over
+                # neighbors is just min(v). Skipping the join removes the
+                # labels-side shuffle from the one round that always touches
+                # the FULL edge set (later frontiers collapse), at every
+                # scale. Same aggregation result by construction; fixpoint
+                # parity with star/union-find stays pinned in
+                # tests/test_graph.py.
+                nbr_min = edges.groupBy("u").agg(
+                    F.min("v").alias("nbr_comp")
+                )
+            else:
+                nbr_min = (
+                    edges.join(frontier, edges.v == frontier.node)
+                    .groupBy("u")
+                    .agg(F.min("comp").alias("nbr_comp"))
+                )
+            # The convergence flag is FUSED into the propagation projection:
+            # detecting "did any label change" is then a predicate scan of the
+            # frame we just checkpointed anyway, not (as a naive loop writes
+            # it) a second old-vs-new join — one fewer shuffle per round. The
+            # changed COUNT is fused further (r12): an observed metric on the
+            # checkpointed plan is computed DURING the checkpoint
+            # materialization, so each round is ONE job instead of
+            # checkpoint + count (the accumulator-in-the-checkpoint-job fusion
+            # r11 left open; measured min 2.27 s vs 2.68 s / median 2.58 vs
+            # 3.30 on the sf0.1 LSH graph, faster on 6 of 6 interleaved
+            # alternations). Both modes now read the exact count for free, so
+            # the stall probe no longer costs an extra aggregation.
+            new_comp = F.least(
+                F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
             )
-            aug = edges.select("u", "v").unionByName(shortcuts)
-            # star gets what's LEFT of the budget (r9 ADVICE: a fresh
-            # max_iter let auto consume up to ~2x the stated bound);
-            # len(history) = propagation rounds already spent
-            result = _cc_star(aug, "u", "v", max_iter - len(history))
-            edges.unpersist()
-            return result
-    edges.unpersist()
-    raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+            obs = Observation(f"cc_changed_{uuid.uuid4().hex}")
+            new_labels = (
+                labels.join(nbr_min, labels.node == nbr_min.u, "left")
+                .select(
+                    "node",
+                    new_comp.alias("comp"),
+                    (new_comp < F.col("comp")).alias("changed"),
+                )
+                .observe(obs, F.count_if(F.col("changed")).alias("n_changed"))
+                .localCheckpoint()
+            )
+            changed = obs.get["n_changed"]
+            # Both views are filters over the frame just checkpointed — no
+            # recomputation, and the frontier's runtime row count is visible
+            # to AQE for the next round's join-strategy choice.
+            frontier = new_labels.filter("changed").drop("changed")
+            labels = new_labels.drop("changed")
+            if changed == 0:
+                return labels
+            history.append(changed)
+            if (
+                star_on_stall
+                and len(history) >= 3
+                and history[-1] * 2 > history[-3]
+            ):
+                # Frontier stalled (long-chain signature: ~one hop per round).
+                # Hand the remaining work to the O(log n) star scheme, seeded
+                # with the labels already propagated as shortcut edges.
+                _LAST_AUTO_SWITCHED = True
+                shortcuts = labels.filter(
+                    F.col("comp") != F.col("node")
+                ).select(F.col("node").alias("u"), F.col("comp").alias("v"))
+                aug = edges.select("u", "v").unionByName(shortcuts)
+                # star gets what's LEFT of the budget (r9 ADVICE: a fresh
+                # max_iter let auto consume up to ~2x the stated bound);
+                # len(history) = propagation rounds already spent
+                return _cc_star(aug, "u", "v", max_iter - len(history))
+        raise RuntimeError(
+            f"connected_components: no fixpoint in {max_iter} rounds"
+        )
+    finally:
+        edges.unpersist()
 
 
 def _cc_star(

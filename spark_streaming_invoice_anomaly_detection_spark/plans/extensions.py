@@ -310,10 +310,10 @@ def q_lsh_capped_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     binding cap drops, with its size — what a production pipeline feeds
     to a downstream exact/sampled-verify pass so capped recall loss is
     measured, not assumed (operators/dedup.py:lsh_oversized_buckets)."""
-    # r11: spread before the tokenize/8-md5-signature pipeline — this
-    # audit rebuilds the spine OUTSIDE minhash_near_dups (which spreads
-    # internally), so the CPU-heavy stages ran on the 2-task union scan.
-    # Measured 3.11 s -> see OPTIMIZATION_r11.md; no-op on wide scans.
+    # Spread before the tokenize/8-md5-signature pipeline: this audit
+    # rebuilds the spine OUTSIDE minhash_near_dups (which spreads
+    # internally), so the CPU-heavy stages otherwise run on the 2-task
+    # union scan (3.11 s measured that way); no-op on wide scans.
     docs = spread_if_narrow(_augmented_docs(spark, sf_dir))
     shingled = D.shingle_docs(
         docs.filter(
@@ -5119,10 +5119,10 @@ def q_minhash_estimator_calibration(
     signature/shingle joins, then ONE ~9-row hash agg; candidates are
     bucket-capped so pair work stays corpus-linear.
     """
-    # r11: spread before the tokenize/signature pipeline (this audit
-    # rebuilds the spine outside minhash_near_dups and both
-    # localCheckpoints MATERIALIZE on the input's width — previously the
-    # 2-task union scan). Measured 3.87 s -> see OPTIMIZATION_r11.md.
+    # Spread before the tokenize/signature pipeline: this audit rebuilds
+    # the spine outside minhash_near_dups, and both localCheckpoints
+    # MATERIALIZE on the input's width, otherwise the 2-task union scan
+    # (3.87 s measured that way).
     docs = spread_if_narrow(_augmented_docs(spark, sf_dir))
     shingled = D.shingle_docs(
         docs.filter(F.size(X.tokenize(F.col("text"))) >= F.lit(_MH_NGRAM)),
@@ -6620,16 +6620,16 @@ def q_minhash_threshold_sweep(
 
     Audit cadence: once-per-corpus-revision tuning audit (same contract
     as ``dedup_recall_matrix``), not a routine query — at x100 it
-    measured 36.8x / 85.8 s (scripts/probe_results/r10_*.json), the cost
-    of exact-Jaccard-verifying every threshold-0 candidate; it is paid
-    when the corpus or the dedup knobs change. For routine monitoring,
+    measured 36.8x / 85.8 s, the cost of exact-Jaccard-verifying every
+    threshold-0 candidate; it is paid when the corpus or the dedup knobs
+    change. For routine monitoring,
     ``minhash_threshold_sweep_sampled`` runs the same curve over the
     ``doc_id % _AUDIT_SAMPLE_MOD`` slice (the APSS pattern: ~1/5 of
     docs, ~1/25 of candidate-pair work) — full mode stays the audit of
     record at corpus revisions. Measured at x100, where pair work (not
-    fixed overhead) dominates: sampled 13.5 s vs full 85.8 s, >6x on a
-    like-for-like box (scripts/probe_results/ r11 vs r10; at sf0.1 the
-    gap is only ~1.2x because session+tokenize overheads dominate).
+    fixed overhead) dominates: sampled 13.5 s vs full 85.8 s, >6x (at
+    sf0.1 the gap is only ~1.2x because session+tokenize overheads
+    dominate).
     """
     pairs0 = D.minhash_near_dups(
         _augmented_docs(spark, sf_dir, sample_mod),
@@ -7099,10 +7099,10 @@ def q_dedup_recall_matrix(
     mod) trade that operating point against emitted volume.
 
     Audit cadence: once-per-corpus-revision (same contract as
-    minhash_threshold_sweep) — at x100 the r10 4-plant matrix measured
-    69.3x / 236.8 s (scripts/probe_results/), dominated by the banded
-    LSH pass over the planted corpus; it runs when the corpus or a
-    detector's knobs change, not per query. For routine monitoring,
+    minhash_threshold_sweep) — at x100 the 4-plant matrix measured
+    69.3x / 236.8 s, dominated by the banded LSH pass over the planted
+    corpus; it runs when the corpus or a detector's knobs change, not per
+    query. For routine monitoring,
     ``dedup_recall_matrix_sampled`` runs the same 25-cell matrix over
     the ``doc_id % _AUDIT_SAMPLE_MOD`` base slice (~1/5 of plants,
     ~1/25 of LSH pair work; slicing BEFORE planting keeps every planted

@@ -1735,10 +1735,10 @@ def q_repetition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_selection.py); only ~(rem/size + 2^-bits) of each
     source's rows are sorted.
 
-    Measured (min-of-3, scale_probe): histogram 1.737 s x1 / 3.804 s
-    x100 vs the plain window's 1.153 / 1.778 — the second column-pruned
-    scan costs more than the saved sort while the per-source sort still
-    fits one task. The prefilter is kept anyway, on the axis the probe
+    Measured (min-of-3): histogram 1.737 s x1 / 3.804 s x100 vs the
+    plain window's 1.153 / 1.778 — the second column-pruned scan costs
+    more than the saved sort while the per-source sort still fits one
+    task. The prefilter is kept anyway, on the axis the probe
     corpus cannot reach: the plain window's partitionBy(source) caps
     parallelism at n_sources (~20) and sorts each ENTIRE source in a
     single task (~5e9 rows/task at 100 TB, a guaranteed spill), while

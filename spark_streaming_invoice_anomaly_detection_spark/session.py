@@ -43,7 +43,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    Defaults come from env so the driver's bench harness can steer them:
+    Defaults come from env so a caller such as ``perfbench`` can steer them:
     ``SPARK_GRAFT_CPUS`` sets local parallelism and shuffle partitions.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))

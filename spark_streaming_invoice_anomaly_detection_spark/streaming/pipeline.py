@@ -193,22 +193,29 @@ def start_pipeline(
             sinks.erroneous(classify_erroneous(batch), epoch_id)
 
             valid = filter_valid_invoices(batch).persist()
-            cancels = valid.filter(F.col("invoice_no").startswith("C")).select(
-                "invoice_no", "last_updated"
-            )
-            if cancel_stage:
-                # stage for the window query (stage 2) instead of shipping
-                # raw rows — the reference publishes only the window counts
-                cancels.write.mode("append").parquet(cancel_stage)
-            else:
-                sinks.cancellations(cancels, epoch_id)
+            try:
+                cancels = valid.filter(
+                    F.col("invoice_no").startswith("C")
+                ).select("invoice_no", "last_updated")
+                if cancel_stage:
+                    # stage for the window query (stage 2) instead of
+                    # shipping raw rows — the reference publishes only the
+                    # window counts
+                    cancels.write.mode("append").parquet(cancel_stage)
+                else:
+                    sinks.cancellations(cancels, epoch_id)
 
-            candidates = valid.filter(~F.col("invoice_no").startswith("C"))
-            if kmeans is not None:
-                sinks.kmeans_anomalies(score_anomalies(candidates, kmeans), epoch_id)
-            if bisect is not None:
-                sinks.bisect_anomalies(score_anomalies(candidates, bisect), epoch_id)
-            valid.unpersist()
+                candidates = valid.filter(~F.col("invoice_no").startswith("C"))
+                if kmeans is not None:
+                    sinks.kmeans_anomalies(
+                        score_anomalies(candidates, kmeans), epoch_id
+                    )
+                if bisect is not None:
+                    sinks.bisect_anomalies(
+                        score_anomalies(candidates, bisect), epoch_id
+                    )
+            finally:
+                valid.unpersist()
         finally:
             batch.unpersist()
 

@@ -181,6 +181,22 @@ def test_auto_switches_to_star_on_long_chain(spark):
     assert graph._LAST_AUTO_SWITCHED, "stall probe must have fired"
 
 
+def test_auto_star_failure_releases_edges(spark):
+    """When the star phase of "auto" runs out of budget, the RuntimeError
+    still leaves no CacheManager entry behind (the persisted edge list is
+    released on the error path too)."""
+    from spark_streaming_invoice_anomaly_detection_spark.operators import graph
+
+    spark.catalog.clearCache()
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 64)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="star"):
+        connected_components(pairs, max_iter=4, algorithm="auto")
+    assert graph._LAST_AUTO_SWITCHED, "stall probe must have fired"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_auto_stays_on_propagation_for_short_diameter(spark):
     """On the near-dup topology (cliques + stars, diameter <= 3) the
     frontier collapses geometrically, the probe never fires, and auto is

@@ -16,6 +16,7 @@ from spark_streaming_invoice_anomaly_detection_spark.ml.clustering import (
     load_detector,
     save_detector,
     train_detector,
+    train_sweep,
 )
 from spark_streaming_invoice_anomaly_detection_spark.plans.ml_queries import (
     ANOMALY_OUTPUT_COLUMNS,
@@ -106,4 +107,17 @@ def test_training_query_output_and_no_cache_left(spark, sf_dir):
     out = q_kmeans_anomalies(spark, sf_dir)
     assert tuple(out.columns) == ANOMALY_OUTPUT_COLUMNS
     assert out.count() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_failed_sweep_releases_its_cache(spark):
+    """A sweep that raises mid-way still unpersists the frame it cached."""
+    spark.catalog.clearCache()
+    train = spark.createDataFrame(
+        [(1.0 + i * 0.1, 1.0, 2.0, 8.0, 5.0) for i in range(10)],
+        ", ".join(f"{c} double" for c in _FEATS),
+    )
+    feats = assemble_features(train, _FEATS)
+    with pytest.raises(ValueError, match="unknown algo"):
+        train_sweep(feats, algo="bogus", k_range=range(1, 3))
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

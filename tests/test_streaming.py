@@ -314,3 +314,41 @@ def test_full_pipeline_fanout(spark, tmp_path):
     anomalies = {r.invoice_no for r in collected.kmeans_anomalies}
     assert "536999" in anomalies
     assert "536365" not in anomalies
+
+
+@pytest.mark.slow
+def test_pipeline_sink_failure_releases_batch_caches(spark, tmp_path):
+    """A sink that raises stops the pipeline with the sink's error, and
+    fan_out still unpersists both frames it cached for that batch."""
+    from pyspark.errors import StreamingQueryException
+
+    from spark_streaming_invoice_anomaly_detection_spark.streaming.pipeline import (
+        CollectingSinks,
+        start_pipeline,
+    )
+
+    def failing_sink(_df, _epoch):
+        raise RuntimeError("cancellations sink down")
+
+    src = tmp_path / "in"
+    os.makedirs(src)
+    with open(src / "batch0.txt", "w") as f:
+        f.write("\n".join([GOOD, CANCEL]) + "\n")
+
+    spark.catalog.clearCache()
+    raw = spark.readStream.format("text").load(str(src))
+    sinks = CollectingSinks().as_sinks()
+    sinks.cancellations = failing_sink
+    q = start_pipeline(
+        raw,
+        sinks,
+        trigger_seconds=1,
+        expiry_ticks=2,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    try:
+        with pytest.raises(StreamingQueryException, match="cancellations sink down"):
+            q.main.awaitTermination(90)
+    finally:
+        q.stop()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
