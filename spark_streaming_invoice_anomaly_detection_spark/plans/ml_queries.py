@@ -67,9 +67,9 @@ _FEATS = ["avg_unit_price", "min_unit_price", "max_unit_price", "time", "number_
 def q_centroid_distance_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sqdist to each centroid, argmin cluster, threshold flag (M4/M5/M6).
 
-    The real detector does this with model.transform + a broadcast centroid
-    join (ml/clustering.py); this fixed-centroid variant proves the
-    arithmetic against the oracle.
+    The real detector does this with model.transform + a literal-centroid
+    distance Column (ml/clustering.py:centroid_distance); this
+    fixed-centroid variant proves the arithmetic against the oracle.
     """
     feats = _featurize(spark, sf_dir)
 

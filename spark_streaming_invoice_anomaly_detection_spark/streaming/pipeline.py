@@ -9,7 +9,9 @@ Structured Streaming shape: ONE stateful query; the four consumers run
 inside ``foreachBatch`` over the emitted-invoice micro-batch with a single
 ``persist()`` — the SS equivalent of the reference's
 ``completedInvoices.cache()`` fan-out (T5; four independent writeStream
-queries would each re-run the state store).
+queries would each re-run the state store). Both detectors score the
+batch's candidates in ONE projection, persisted once; the kmeans and
+bisect sinks receive filtered views of it.
 
 The 8 min/1 min cancellation window count (T4, :322-331) cannot chain onto
 the stateful operator inside the same query (Spark rejects an aggregation
@@ -19,9 +21,12 @@ Streaming equivalent of the reference publishing to an intermediate topic.
 Enable it by passing ``staging_dir``; ``sinks.cancellations`` then receives
 (window_start, window_end, n) updates instead of raw cancellation rows.
 
-Anomaly scoring (M4-M6) reuses the batch scorer: broadcast centroid join +
-native arithmetic — models ship to executors once per batch via the
-broadcast join, mirroring the reference's model broadcast (:148-152).
+Anomaly scoring (M4-M6) uses the batch scorer's distance expression
+(``ml.clustering.centroid_distance``): the centroids are array literals in
+the plan, so each model reaches the executors with the task closure,
+the counterpart of the reference's model broadcast (:148-152). The model
+copies, centroid literals, threshold predicates and the validation reason
+Column are built once in ``start_pipeline``, not per micro-batch.
 """
 
 from __future__ import annotations
@@ -30,14 +35,21 @@ import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.ml.clustering import BisectingKMeansModel, KMeansModel
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..ml.clustering import Detector, detect_anomalies, distance_to_centroid
+from ..ml.clustering import (
+    Detector,
+    assemble_features,
+    centroid_distance,
+    detect_anomalies,
+    distance_to_centroid,
+)
 from .parse import parse_purchase_lines, route_events
 from .session_state import sessionize_invoices
-from .validate import classify_erroneous, filter_valid_invoices
+from .validate import classify_erroneous, filter_valid_invoices, reject_reason
 from .windows import sliding_count
 
 SinkFn = Callable[[DataFrame, int], None]
@@ -53,11 +65,37 @@ FEATURE_ORDER = [
 
 def score_anomalies(invoices: DataFrame, detector: Detector) -> DataFrame:
     """Valid non-cancellation invoices -> anomaly invoice numbers (M4-M6)."""
-    from ..ml.clustering import assemble_features
-
     feats = assemble_features(invoices, FEATURE_ORDER)
     scored = distance_to_centroid(feats, detector.model)
     return detect_anomalies(scored, detector.threshold).select("invoice_no", "dist")
+
+
+@dataclass(frozen=True)
+class _Scorer:
+    """One detector prepared for ``fan_out``: a model copy that writes its
+    own prediction column, its distance Column, its anomaly view and the
+    sink that view goes to."""
+
+    model: KMeansModel | BisectingKMeansModel
+    distance: Column
+    flagged: Column
+    output: list[Column]
+    sink: SinkFn
+
+    @classmethod
+    def prepare(cls, name: str, detector: Detector, sink: SinkFn) -> _Scorer:
+        prediction, dist = f"{name}_prediction", f"{name}_dist"
+        return cls(
+            model=detector.model.copy().setPredictionCol(prediction),
+            distance=centroid_distance(
+                F.col("features"),
+                F.col(prediction),
+                detector.model.clusterCenters(),
+            ).alias(dist),
+            flagged=F.col(dist) > F.lit(detector.threshold),
+            output=[F.col("invoice_no"), F.col(dist).alias("dist")],
+            sink=sink,
+        )
 
 
 @dataclass
@@ -187,36 +225,47 @@ def start_pipeline(
     if cancel_stage:
         os.makedirs(cancel_stage, exist_ok=True)
 
+    scorers = [
+        _Scorer.prepare(name, det, sink)
+        for name, det, sink in (
+            ("kmeans", kmeans, sinks.kmeans_anomalies),
+            ("bisect", bisect, sinks.bisect_anomalies),
+        )
+        if det is not None
+    ]
+    reason = reject_reason()
+    is_cancel = F.col("invoice_no").startswith("C")
+
     def fan_out(batch: DataFrame, epoch_id: int) -> None:
         batch = batch.persist()
+        scored = None
         try:
-            sinks.erroneous(classify_erroneous(batch), epoch_id)
+            sinks.erroneous(classify_erroneous(batch, reason), epoch_id)
 
-            valid = filter_valid_invoices(batch).persist()
-            try:
-                cancels = valid.filter(
-                    F.col("invoice_no").startswith("C")
-                ).select("invoice_no", "last_updated")
-                if cancel_stage:
-                    # stage for the window query (stage 2) instead of
-                    # shipping raw rows — the reference publishes only the
-                    # window counts
-                    cancels.write.mode("append").parquet(cancel_stage)
-                else:
-                    sinks.cancellations(cancels, epoch_id)
+            valid = filter_valid_invoices(batch, reason)
+            cancels = valid.filter(is_cancel).select("invoice_no", "last_updated")
+            if cancel_stage:
+                # stage for the window query (stage 2) instead of shipping
+                # raw rows — the reference publishes only the window counts
+                cancels.write.mode("append").parquet(cancel_stage)
+            else:
+                sinks.cancellations(cancels, epoch_id)
 
-                candidates = valid.filter(~F.col("invoice_no").startswith("C"))
-                if kmeans is not None:
-                    sinks.kmeans_anomalies(
-                        score_anomalies(candidates, kmeans), epoch_id
+            if scorers:
+                feats = assemble_features(valid.filter(~is_cancel), FEATURE_ORDER)
+                for scorer in scorers:
+                    feats = scorer.model.transform(feats)
+                scored = feats.select(
+                    "invoice_no", *[scorer.distance for scorer in scorers]
+                ).persist()
+                for scorer in scorers:
+                    scorer.sink(
+                        scored.filter(scorer.flagged).select(*scorer.output),
+                        epoch_id,
                     )
-                if bisect is not None:
-                    sinks.bisect_anomalies(
-                        score_anomalies(candidates, bisect), epoch_id
-                    )
-            finally:
-                valid.unpersist()
         finally:
+            if scored is not None:
+                scored.unpersist()
             batch.unpersist()
 
     writer = (

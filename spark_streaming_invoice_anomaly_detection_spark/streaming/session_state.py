@@ -12,13 +12,21 @@ Reference semantics, preserved exactly:
 - 2 ticks (2 x 20 s batches) without events => expired; expired state is
   emitted once and dropped (:207-208, :239-246)
 
-DStream ticks were processing-time, batch-aligned; the Structured Streaming
-equivalent is a ProcessingTimeTimeout of 2 x trigger interval.
+The tick is counted in state, as ``updateStateByKey``'s ``ticksSinceUpdate``
+was: every update arms a processing-time timeout of half a trigger, so the
+next micro-batch finds the group timed out; the timeout call increments
+``ticks`` and re-arms, and the invoice is emitted and removed at
+``ticks >= expiry_ticks``. New lines or a parse error reset ``ticks`` to 0.
+An invoice read in batch n is therefore emitted by batch n + expiry_ticks,
+whether the batches run on time or back to back behind overruns. (A batch
+that starts less than half a trigger after the previous one, which happens
+only when an overrun ends just before a trigger boundary, counts no tick.)
 ``applyInPandasWithState`` gives exactly-once emission on timeout + removal,
 which is precisely the reference's "emit once then drop next batch"
 (SURVEY.md §7 hard-point 1). State lives in the state store (RocksDB-able at
 scale), partitioned by invoice_no — the same shuffle key the reference's
-``updateStateByKey`` used.
+``updateStateByKey`` used. Like ``updateStateByKey``, every live group is
+visited once per micro-batch.
 
 Finalization mirrors ``toInvoice`` (InvoicePipeline.scala:472-492): the
 streaming path deliberately uses the FIRST line's hour and customer (batch
@@ -64,7 +72,8 @@ EMITTED_SCHEMA = T.StructType(
     ]
 )
 
-#: Buffered lines as parallel arrays + the sticky error reason.
+#: Buffered lines as parallel arrays, the sticky error reason, and the
+#: number of micro-batches since the last event.
 STATE_SCHEMA = T.StructType(
     [
         T.StructField("quantities", T.ArrayType(T.IntegerType())),
@@ -73,12 +82,14 @@ STATE_SCHEMA = T.StructType(
         T.StructField("customer_ids", T.ArrayType(T.StringType())),
         T.StructField("countries", T.ArrayType(T.StringType())),
         T.StructField("error_reason", T.StringType()),
+        T.StructField("ticks", T.IntegerType()),
     ]
 )
 
 
-def make_update_fn(timeout_ms: int):
-    """Build the per-group update function with a bound expiry timeout.
+def make_update_fn(tick_ms: int, expiry_ticks: int):
+    """Build the per-group update function: a timeout of ``tick_ms`` counts
+    one tick, and ``expiry_ticks`` ticks expire the invoice.
 
     Everything the Python worker executes is nested here so cloudpickle
     ships it by value — workers never import this package (the hosting
@@ -107,7 +118,7 @@ def make_update_fn(timeout_ms: int):
             )
 
         def finalize(inv_no, st):
-            quantities, dates, prices, customers, countries, err = st
+            quantities, dates, prices, customers, countries, err, _ticks = st
             n = len(prices)
             if n:
                 row = {
@@ -146,17 +157,23 @@ def make_update_fn(timeout_ms: int):
         (invoice_no,) = key
 
         if state.hasTimedOut:
-            # expired: emit exactly once, then drop (reference :207-208)
-            yield finalize(invoice_no, state.get)
-            state.remove()
+            # one more micro-batch without events (reference :239-246)
+            st = state.get
+            ticks = st[6] + 1
+            if ticks >= expiry_ticks:
+                # expired: emit exactly once, then drop (reference :207-208)
+                yield finalize(invoice_no, st)
+                state.remove()
+            else:
+                state.update((*st[:6], ticks))
+                state.setTimeoutDuration(tick_ms)
             return
 
-        # Hot path: runs once per live group per trigger (~20k groups/batch
-        # in the bench), so per-group pandas overhead is the engine's own
-        # share of the stateful cost (measured ~30 us/group vs a ~110 us
-        # framework floor — see README runbook). Single-chunk batches skip
-        # the concat, and the no-error case (overwhelmingly common) skips
-        # the second mask/filter entirely.
+        # Hot path: runs once per group with events in the batch (about
+        # 1,000 groups a batch in perfbench's stream_paced), so per-group
+        # pandas overhead is the engine's own share of the stateful cost.
+        # Single-chunk batches skip the concat, and the no-error case
+        # (overwhelmingly common) skips the second mask/filter entirely.
         chunks = list(pdfs)
         batch = (
             chunks[0]
@@ -192,8 +209,10 @@ def make_update_fn(timeout_ms: int):
                 for c in batch["country"].tolist()
             ]
 
-        state.update((quantities, dates, prices, customers, countries, error_reason))
-        state.setTimeoutDuration(timeout_ms)
+        state.update(
+            (quantities, dates, prices, customers, countries, error_reason, 0)
+        )
+        state.setTimeoutDuration(tick_ms)
         return
 
     return update
@@ -207,12 +226,11 @@ def sessionize_invoices(
     """Keyed purchase/error events -> stream of finalized invoices.
 
     ``events`` must carry the PURCHASE columns (parse.route_events output).
-    Emits one row per invoice when it has seen no events for
-    ``expiry_ticks * trigger_seconds`` of processing time.
+    Emits one row per invoice in the ``expiry_ticks``-th micro-batch after
+    the last one that brought it an event.
     """
-    timeout_ms = expiry_ticks * trigger_seconds * 1000
     return events.groupBy("invoice_no").applyInPandasWithState(
-        make_update_fn(timeout_ms),
+        make_update_fn(trigger_seconds * 500, expiry_ticks),  # half a trigger, ms
         outputStructType=EMITTED_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",

@@ -14,7 +14,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _reject_reason() -> Column:
+def reject_reason() -> Column:
+    """The first failing check's reason, or null for a valid invoice.
+
+    Building this Column costs tens of Py4J calls on the driver, so a
+    caller that classifies every micro-batch builds it once and passes it
+    to both functions below."""
     return (
         F.when(F.col("error_reason").isNotNull(), F.col("error_reason"))
         .when(F.col("lines") == 0, "no purchase lines")
@@ -25,20 +30,22 @@ def _reject_reason() -> Column:
     )
 
 
-def classify_erroneous(invoices: DataFrame) -> DataFrame:
+def classify_erroneous(invoices: DataFrame, reason: Column | None = None) -> DataFrame:
     """Erroneous stream: ``invoice_no, reason`` (published as
     "<invoiceNo>,<reason>" — InvoicePipeline.scala:384)."""
-    return (
-        invoices.withColumn("reason", _reject_reason())
-        .filter(F.col("reason").isNotNull())
-        .select("invoice_no", "reason")
+    reason = reject_reason() if reason is None else reason
+    return invoices.select("invoice_no", reason.alias("reason")).filter(
+        F.col("reason").isNotNull()
     )
 
 
-def filter_valid_invoices(invoices: DataFrame) -> DataFrame:
+def filter_valid_invoices(
+    invoices: DataFrame, reason: Column | None = None
+) -> DataFrame:
     """Valid invoices: no stored error, at least one line, all field checks
     pass (InvoicePipeline.scala:292-312)."""
-    return invoices.filter(_reject_reason().isNull()).drop(
+    reason = reject_reason() if reason is None else reason
+    return invoices.filter(reason.isNull()).drop(
         "error_reason",
         "has_missing_customer",
         "has_invalid_date",

@@ -110,6 +110,31 @@ def test_training_query_output_and_no_cache_left(spark, sf_dir):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_dirty_training_csv_names_the_null_feature(spark, tmp_path):
+    """An invoice whose Quantity values are all non-numeric has a null
+    ``number_items``; training fails with a ValueError naming the column
+    and the invoice count, not a VectorAssembler trace."""
+    from spark_streaming_invoice_anomaly_detection_spark.sources.csv_batch import (
+        load_and_featurize_training_csv,
+    )
+
+    rows = [
+        f"{500000 + i},A,ITEM,{q},12/1/2010 {8 + i}:00,{1.5 + i},{17000 + i},UK"
+        for i in range(6)
+        for q in ("2", "3")
+    ]
+    rows += ["500100,A,ITEM,abc,12/1/2010 9:00,2.5,17100,UK"] * 2
+    rows += ["500101,A,ITEM,x,12/1/2010 9:30,2.5,17101,UK"]
+    path = tmp_path / "train.csv"
+    path.write_text(
+        "InvoiceNo,StockCode,Description,Quantity,InvoiceDate,UnitPrice,"
+        "CustomerID,Country\n" + "\n".join(rows) + "\n"
+    )
+    feats = assemble_features(load_and_featurize_training_csv(spark, str(path)), _FEATS)
+    with pytest.raises(ValueError, match=r"'number_items' \(2 invoices\)"):
+        train_detector(feats, k_range=range(1, 3), threshold_k=2)
+
+
 def test_failed_sweep_releases_its_cache(spark):
     """A sweep that raises mid-way still unpersists the frame it cached."""
     spark.catalog.clearCache()

@@ -2,8 +2,8 @@
 validation cascade (P10), sliding window (T4), full pipeline fan-out.
 
 File source + memory/collecting sinks replace Kafka (same DataFrame
-contract); expiry is driven by a short ProcessingTimeTimeout and a
-follow-up batch, mirroring the reference's 2-empty-ticks rule.
+contract); expiry counts micro-batches (ticks) as the reference's
+2-empty-ticks rule does, pinned by batch id in ``TestExpiryTick``.
 """
 
 from __future__ import annotations
@@ -178,6 +178,100 @@ class TestSessionization:
         (inv,) = rows
         assert inv.error_reason.startswith("parse error:")
         assert inv.lines == 1
+
+
+# ---------------------------------------------------------------------------
+# Expiry tick (T2): emission batch id = reading batch id + expiry_ticks
+# ---------------------------------------------------------------------------
+
+
+def _tick_run(spark, tmp_path, first, follow_up=(), sink_sleep_s=0.0, expiry_ticks=2):
+    """Run the sessionizer with a 1 s trigger into a foreachBatch sink.
+
+    ``first`` is in the source before the query starts, so batch 0 reads
+    it; the sink writes ``follow_up`` into the source while epoch 0 runs,
+    so batch 1 reads it. The sink sleeps ``sink_sleep_s`` on every epoch.
+    Returns ({batch id: input rows} from ``recentProgress``,
+    {invoice_no: emitting epoch}, {batch id: triggerExecution ms}).
+    """
+    from spark_streaming_invoice_anomaly_detection_spark.streaming.pipeline import (
+        build_invoice_stream,
+    )
+
+    src, staging = tmp_path / "in", tmp_path / "staging"
+    os.makedirs(src)
+    os.makedirs(staging)
+
+    def land(name, lines):
+        with open(staging / name, "w") as f:
+            f.write("\n".join(lines) + "\n")
+        os.rename(staging / name, src / name)
+
+    emitted = {}
+
+    def sink(df, epoch_id):
+        for r in df.select("invoice_no").collect():
+            emitted[r.invoice_no] = epoch_id
+        if epoch_id == 0 and follow_up:
+            land("b1.txt", follow_up)
+        time.sleep(sink_sleep_s)
+
+    land("b0.txt", first)
+    want = {ln.split(",")[0] for ln in [*first, *follow_up]}
+    q = (
+        build_invoice_stream(
+            spark.readStream.format("text").load(str(src)),
+            trigger_seconds=1,
+            expiry_ticks=expiry_ticks,
+        )
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="1 second")
+        .start()
+    )
+    try:
+        _poll(lambda: len(want & set(emitted)), len(want), deadline_s=40, interval=0.2)
+        last = max(emitted.values(), default=0)
+        _poll(lambda: (q.lastProgress or {}).get("batchId", -1), last, deadline_s=10, interval=0.2)
+        progress = q.recentProgress
+    finally:
+        q.stop()
+    reads = {p["batchId"]: p["numInputRows"] for p in progress if p["numInputRows"]}
+    durations = {p["batchId"]: p["durationMs"]["triggerExecution"] for p in progress}
+    return reads, emitted, durations
+
+
+@pytest.mark.slow
+class TestExpiryTick:
+    """The reference expires at ``ticksSinceUpdate >= 2``
+    (InvoicePipeline.scala:239-246): read in batch n, emitted in n + 2."""
+
+    def test_emitted_expiry_ticks_after_reading_batch(self, spark, tmp_path):
+        reads, emitted, _ = _tick_run(spark, tmp_path, [GOOD], follow_up=[QUOTED])
+        assert reads == {0: 1, 1: 1}
+        assert emitted == {"536365": 2, "536366": 3}
+
+    def test_forced_overrun_keeps_the_tick(self, spark, tmp_path):
+        # every epoch outlasts 2 x the 1 s trigger, so a 2 s processing-time
+        # timeout would already be due at n + 1
+        reads, emitted, durations = _tick_run(
+            spark, tmp_path, [GOOD], follow_up=[QUOTED], sink_sleep_s=2.5
+        )
+        assert reads == {0: 1, 1: 1}
+        assert emitted == {"536365": 2, "536366": 3}
+        assert all(durations[b] > 2000 for b in range(4))
+
+    def test_event_at_next_batch_resets_the_tick(self, spark, tmp_path):
+        # 536365 gets a line and 536368 a parse error at n + 1; 536366 is
+        # left alone and keeps n + 2
+        reads, emitted, _ = _tick_run(
+            spark,
+            tmp_path,
+            [GOOD, QUOTED, BAD_QTY.replace("notanint", "2")],
+            follow_up=["536365,x,y,4,12/1/2010 8:27,10.45,17850,United Kingdom", BAD_QTY],
+        )
+        assert reads == {0: 3, 1: 2}
+        assert emitted == {"536365": 3, "536366": 2, "536368": 3}
 
 
 # ---------------------------------------------------------------------------
