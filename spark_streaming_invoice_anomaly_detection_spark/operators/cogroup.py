@@ -11,7 +11,7 @@ binary searches per order — O(n log n) per key, no intermediate blow-up,
 and per-key memory bounded by that key's rows (the property that matters
 when a 100 TB corpus shuffles onto 1000 executors).
 
-r12: the per-group function is ``applyInArrow`` (FlatMapCoGroupsInArrow),
+The per-group function is ``applyInArrow`` (FlatMapCoGroupsInArrow),
 not ``applyInPandas`` — groups cross the Python boundary as Arrow record
 batches and the math runs on NumPy views of the Arrow buffers, skipping
 the pandas Block/Series construction per group that dominated the

@@ -152,10 +152,10 @@ def lsh_candidate_pairs(
     bucket 26 -> 180 -> 1510 at x1/x10/x100, in-bucket pair work
     21k -> 345k -> 20M).
 
-    The cap is a BOUNDED-RECALL heuristic, not a lossless re-routing
-    (round-7 VERDICT "What's wrong" #2 / ADVICE): a bucket keys on ONE
-    band (2 of 8 minhash rows at the registered params), so an oversized
-    bucket's members need not be near-identical, and a genuine near-dup
+    The cap is a BOUNDED-RECALL heuristic, not a lossless re-routing: a
+    bucket keys on ONE band (2 of 8 minhash rows at the registered
+    params), so an oversized bucket's members need not be
+    near-identical, and a genuine near-dup
     pair (Jaccard >= threshold, NOT byte-identical) inside one is
     silently dropped unless it also co-occurs in a <=cap bucket of
     another band — exact_dedup's sha256 pass recovers only the
@@ -266,15 +266,15 @@ def jaccard_distinct(a: Column, b: Column) -> Column:
     arrays (all shingle columns — word_ngrams applies array_distinct and
     returns [] for short docs): |a ∪ b| is then |a| + |b| - |a ∩ b| by
     inclusion-exclusion, so the union's second per-pair hash-set build is
-    replaced by integer arithmetic (r11 optimization round; one set op
-    per pair instead of two). Same ints, same single double division —
+    replaced by integer arithmetic (one set op per pair instead of two).
+    Same ints, same single double division —
     bit-identical to :func:`jaccard` on distinct inputs (pinned in
-    tests/test_r11_optimizations.py); NOT equivalent on inputs with
+    tests/test_extensions.py); NOT equivalent on inputs with
     duplicates, where array_union dedups but size(a) + size(b) does not,
-    NULL caveat (r11 ADVICE): under this engine's Spark-4/ANSI semantics
+    NULL caveat: under this engine's Spark-4/ANSI semantics
     size(NULL) is NULL, so a NULL side propagates to a NULL "union", the
     ``union > 0`` guard falls through, and both forms return 0.0 —
-    parity pinned in tests/test_r12_optimizations.py. Under LEGACY
+    parity pinned in tests/test_extensions.py. Under LEGACY
     sizeOfNull (= -1, pre-3.0 default) the forms WOULD diverge (negative
     ratios); don't export this helper into a session running that conf.
     Every current call site receives word_ngrams output through a
@@ -332,11 +332,11 @@ def minhash_near_dups(
     # iff tokens < ngram), and a size(shingles)>0 filter pushed through
     # the projection re-evaluated the whole shingle expression in an
     # interpreted (non-codegen) Filter: measured 54 s vs 5 s for the
-    # identical stage on the x10 scale corpus. (r11 probe: moving the
+    # identical stage on the x10 scale corpus. (Moving the
     # filter AFTER the materialization to drop the prefilter's second
     # tokenize measured 1.517 s vs 1.527 s end-to-end at sf0.1 — codegen
     # already de-duplicates the two tokenize evaluations within the fill
-    # stage, so the r7 shape is kept.)
+    # stage, so this shape is kept.)
     shingled = shingle_docs(
         df.filter(F.size(tokenize(F.col(text_col))) >= F.lit(ngram)),
         text_col,
@@ -891,30 +891,6 @@ def sampled_spans(
 
     return F.element_at(F.transform(F.array(toks), build), 1)
 
-
-def span_occurrences(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 8,
-    anchor: int = 3,
-    mod: int = 2,
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Documents -> one row per sampled span occurrence:
-    ``(id, *extra_cols, span_hash)`` with ``span_hash = h60(span)``.
-    The census building block: a corpus-wide
-    ``groupBy(span_hash).agg(countDistinct(id))`` then tells which spans
-    recur across documents — one explode + one hash shuffle, linear in
-    sampled spans (~tokens/mod), no pair join anywhere, so unlike the
-    LSH bucket path there is NO quadratic term to cap: boilerplate
-    shared by a million documents is still one group."""
-    spans = sampled_spans(F.col(text_col), window, anchor, mod)
-    return df.select(
-        F.col(id_col), *[F.col(c) for c in extra_cols], F.explode(spans).alias("span")
-    ).select(
-        id_col, *extra_cols, h60(F.col("span")).alias("span_hash")
-    )
 
 def token_lines(text_col: Column | str, width: int = 12) -> Column:
     """Fixed-width token "lines": the structural unit for LINE-level

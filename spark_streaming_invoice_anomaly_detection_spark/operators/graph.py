@@ -94,8 +94,8 @@ def connected_components(
                                                             graph
     unknown / mixed at 100 TB       use ``"auto"``: the stall probe reads
                                     the changed count the round's
-                                    checkpoint job already observes (free
-                                    since r12), switches once the frontier
+                                    checkpoint job already observes
+                                    (free), switches once the frontier
                                     stops halving (checked from round 3),
                                     keeps both bounds
     ==============================  ======================  =============
@@ -157,7 +157,7 @@ def _cc_propagation(
         history: list[int] = []
         for _round in range(max_iter):
             if _round == 0:
-                # Round 1 shortcut (r11 optimization round): every node's
+                # Round 1 shortcut: every node's
                 # label IS its id (comp(v) = v), so joining edges to the
                 # all-nodes frontier is an identity join — min(comp(v)) over
                 # neighbors is just min(v). Skipping the join removes the
@@ -179,11 +179,10 @@ def _cc_propagation(
             # detecting "did any label change" is then a predicate scan of the
             # frame we just checkpointed anyway, not (as a naive loop writes
             # it) a second old-vs-new join — one fewer shuffle per round. The
-            # changed COUNT is fused further (r12): an observed metric on the
+            # changed COUNT is fused further: an observed metric on the
             # checkpointed plan is computed DURING the checkpoint
             # materialization, so each round is ONE job instead of
-            # checkpoint + count (the accumulator-in-the-checkpoint-job fusion
-            # r11 left open; measured min 2.27 s vs 2.68 s / median 2.58 vs
+            # checkpoint + count (measured min 2.27 s vs 2.68 s / median 2.58 vs
             # 3.30 on the sf0.1 LSH graph, faster on 6 of 6 interleaved
             # alternations). Both modes now read the exact count for free, so
             # the stall probe no longer costs an extra aggregation.
@@ -223,7 +222,7 @@ def _cc_propagation(
                     F.col("comp") != F.col("node")
                 ).select(F.col("node").alias("u"), F.col("comp").alias("v"))
                 aug = edges.select("u", "v").unionByName(shortcuts)
-                # star gets what's LEFT of the budget (r9 ADVICE: a fresh
+                # star gets what's LEFT of the budget (a fresh
                 # max_iter let auto consume up to ~2x the stated bound);
                 # len(history) = propagation rounds already spent
                 return _cc_star(aug, "u", "v", max_iter - len(history))
@@ -260,9 +259,9 @@ def _cc_star(
     propagation variant, every node appearing in ``pairs`` gets a label
     row (singletons label themselves).
 
-    r12 round shape (measured min 2.68 s vs 3.77 s / median 3.31 vs 4.03
+    Round shape (measured min 2.68 s vs 3.77 s / median 3.31 vs 4.03
     on the sf0.1 LSH graph, faster on 6 of 6 interleaved alternations;
-    labels pinned identical to the r11 shape):
+    labels pinned identical to the groupBy + self-join shape):
 
     - per-center mins come from a WINDOW aggregate (``min over
       (partition by key)``) instead of groupBy + self-join — one exchange

@@ -1,32 +1,30 @@
-"""Physical data-layout operators: the levers that decide whether a plan
-survives 100 TB (SURVEY.md §7 Phase 4 "100 TB-scale hygiene").
+"""Partitioning and join-shape helpers the registered queries build on.
 
-Three tools, one theme — kill or pre-pay the shuffle:
+Five helpers, one theme — pay for a shuffle only where it buys parallelism
+or saves a bigger one:
 
-- **Partitioned writes** (`write_partitioned`): directory-partition a fact
-  table by a low-cardinality column so later scans with a predicate on it
-  prune whole directories (``PartitionFilters`` in the scan, zero IO for
-  pruned partitions).
-- **Bucketed tables** (`write_bucketed` / `read_table`): pre-shuffle both
-  fact tables ONCE at write time into N hash buckets on the join key; every
-  later equi-join/aggregation on that key runs shuffle-free (no Exchange in
-  the plan). At 100 TB this turns the nightly fact-fact join from the
-  cluster's dominant shuffle into a local zip of bucket files.
+- **Narrow-scan spreads** (`spread_if_narrow`, `cluster_if_narrow`): a
+  one-file parquet scan runs its whole map stage on one core; these
+  repartition it (round-robin, or by the downstream key so the spread IS
+  the aggregation's exchange) when it has fewer files than the cluster
+  has cores, and are no-ops otherwise.
 - **Salted joins** (`salted_join`): when one join key is hot (a handful of
   keys holding a double-digit % of rows), AQE's skew split helps reads but
   the hot key still lands on one reducer. Salting splits each hot key into
-  ``num_salts`` sub-keys and replicates the small side per salt — the
-  classic pre-AQE remedy, still needed when the skewed side feeds a
-  downstream aggregation pinned to the same key.
+  ``num_salts`` sub-keys and replicates the small side per salt.
+- **Skew census** (`key_skew_stats`): the one-row per-key cardinality
+  summary that says whether a key needs salting.
+- **Bloom-reducible joins** (`bloom_reduced_join`): a plain inner
+  equi-join shaped so Catalyst can inject a runtime Bloom filter into the
+  fact side; `RUNTIME_BLOOM_TEST_CONFS` lowers its size gates for tests.
 
-The reference has no persistent-layout surface at all (its only storage is
-MLlib model dirs, Clustering.scala:100-106); this module is engine-side
-scale infrastructure demanded by the driver contract, not a port.
+The reference has no storage-layout surface (its only storage is MLlib
+model dirs, Clustering.scala:100-106); these are engine-side helpers, not
+a port.
 """
-
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -54,7 +52,7 @@ def spread_if_narrow(df: DataFrame) -> DataFrame:
 
 def cluster_if_narrow(df: DataFrame, *keys: str) -> DataFrame:
     """Hash-repartition a NARROW scan by the downstream aggregation/join
-    key — :func:`spread_if_narrow`'s keyed twin (r11 optimization round).
+    key — :func:`spread_if_narrow`'s keyed twin.
 
     Where the round-robin spread adds an exchange on top of the one the
     downstream groupBy needs anyway, the keyed spread IS that exchange:
@@ -76,53 +74,6 @@ def cluster_if_narrow(df: DataFrame, *keys: str) -> DataFrame:
     if len(df.inputFiles()) < target:
         return df.repartition(target, *[F.col(k) for k in keys])
     return df
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as parquet directory-partitioned by ``partition_cols``.
-
-    Scans that filter on a partition column afterwards show the predicate
-    under ``PartitionFilters`` (not ``PushedFilters``): pruning happens at
-    file listing, before any IO. Choose low-cardinality columns (date,
-    region, modality) — every distinct combination is a directory.
-    """
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    num_buckets: int = 8,
-    path: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` hash-bucketed (and sorted) by ``bucket_col``.
-
-    Both sides of a recurring fact-fact join written with the SAME bucket
-    count and key join with no Exchange: each task zips bucket i of A with
-    bucket i of B. The write pays the shuffle once; every subsequent join,
-    groupBy, or dedup on the key rides for free.
-    """
-    w = df.write.mode(mode).format("parquet")
-    if path is not None:
-        w = w.option("path", path)
-    (
-        w.bucketBy(num_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .saveAsTable(table)
-    )
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    """Read a saved (possibly bucketed) table; bucket metadata comes from
-    the catalog, which is what lets the planner elide the join Exchange."""
-    return spark.table(table)
 
 
 def salted_join(
@@ -173,104 +124,6 @@ def key_skew_stats(df: DataFrame, key: str) -> DataFrame:
     )
 
 
-__all__ = [
-    "write_partitioned",
-    "write_bucketed",
-    "read_table",
-    "salted_join",
-    "key_skew_stats",
-]
-
-
-def zorder_bucket(col: Column | str, lo: float, hi: float, bits: int) -> Column:
-    """Map a numeric column into ``[0, 2^bits)`` with width_bucket over the
-    known [lo, hi] range — the per-dimension normalization step of a
-    Z-order key. Values at/above hi clamp into the top bucket."""
-    c = F.col(col) if isinstance(col, str) else col
-    n = 1 << bits
-    # width_bucket returns 0 / n+1 for out-of-range: clamp into [1, n], -1
-    return (
-        F.greatest(
-            F.least(
-                F.width_bucket(c.cast("double"), F.lit(float(lo)), F.lit(float(hi)), F.lit(n)),
-                F.lit(n),
-            ),
-            F.lit(1),
-        )
-        - 1
-    ).cast("long")
-
-
-def zorder_key2(bucket_a: Column, bucket_b: Column, bits: int) -> Column:
-    """Interleave the bits of two ``[0, 2^bits)`` bucket ids (Morton code).
-
-    A fixed expression tree of shifts/masks — fully codegen'd, no UDF. Rows
-    sorted by this key cluster SIMULTANEOUSLY on both dimensions, so
-    file-level min/max statistics skip files for a predicate on EITHER
-    column — the property a single-column sort only gives one of them.
-    """
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        bit_a = F.shiftright(bucket_a, i).bitwiseAND(F.lit(1))
-        bit_b = F.shiftright(bucket_b, i).bitwiseAND(F.lit(1))
-        z = (
-            z.bitwiseOR(F.shiftleft(bit_a, 2 * i))
-            .bitwiseOR(F.shiftleft(bit_b, 2 * i + 1))
-        )
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    bits: int = 8,
-    num_files: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet clustered by the Z-order of two numeric columns.
-
-    The [lo, hi] normalization ranges come from ONE tiny min/max aggregate
-    (4 scalars collected and inlined as literals — not a per-row job);
-    the layout itself is repartitionByRange + sortWithinPartitions on the
-    Morton key, i.e. a single range shuffle at write time. Readers filtering
-    on either column then skip most files via parquet min/max stats — the
-    multi-dimensional analogue of ``write_partitioned``'s pruning, for
-    columns too high-cardinality to directory-partition.
-    """
-    bounds = df.agg(
-        F.min(col_a).alias("a_lo"),
-        F.max(col_a).alias("a_hi"),
-        F.min(col_b).alias("b_lo"),
-        F.max(col_b).alias("b_hi"),
-    ).first()
-    if bounds.a_lo is None or bounds.b_lo is None:
-        # empty input or an all-NULL cluster column: no range to normalize
-        # over — write as-is (what plain df.write would do) instead of
-        # crashing in float(None). Constant columns (lo == hi) are fine:
-        # width_bucket's out-of-range NULL clamps into the top bucket.
-        df.write.mode(mode).parquet(path)
-        return
-    zkey = zorder_key2(
-        zorder_bucket(col_a, bounds.a_lo, bounds.a_hi, bits),
-        zorder_bucket(col_b, bounds.b_lo, bounds.b_hi, bits),
-        bits,
-    )
-    (
-        df.withColumn("__z", zkey)
-        .repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Runtime Bloom-filter semi-join reduction
-# ---------------------------------------------------------------------------
-
 # The conf levers that govern Catalyst's injected Bloom filter (a
 # `bloom_filter_agg` built on the selective build side and a
 # `might_contain(...)` predicate pushed into the large side's scan-filter).
@@ -317,129 +170,10 @@ def bloom_reduced_join(
     return large.join(build, large[large_key] == build[build_key])
 
 
-# ---------------------------------------------------------------------------
-# Catalog statistics (cost-based optimizer feed)
-# ---------------------------------------------------------------------------
-
-
-def analyze_table(
-    spark: SparkSession, table: str, columns: list[str] | None = None
-) -> None:
-    """Collect table (and optionally per-column) statistics into the
-    catalog — the input the cost-based optimizer needs to pick join order
-    and broadcast sides from DATA SIZE rather than file size.
-
-    At 100 TB the difference is concrete: without rowCount/NDV stats the
-    planner only sees compressed parquet bytes (post-filter selectivity
-    unknown → defensive sort-merge joins); with column stats +
-    ``spark.sql.cbo.enabled`` it can reorder a multi-join and broadcast a
-    dimension whose FILTERED size fits, even when the raw table doesn't.
-    Column analysis is one extra scan per call — schedule it with the
-    write, not per query.
-    """
-    spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")
-    if columns:
-        cols = ", ".join(columns)
-        spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR COLUMNS {cols}")
-
-
-def table_stats(spark: SparkSession, table: str) -> dict:
-    """Read back the catalog statistics line: {'size_bytes': int,
-    'row_count': int | None} (row_count None until analyzed)."""
-    for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect():
-        if r.col_name == "Statistics":
-            # e.g. "12345 bytes, 6789 rows" (rows absent pre-ANALYZE)
-            parts = r.data_type.split(",")
-            out = {"size_bytes": int(parts[0].split()[0]), "row_count": None}
-            if len(parts) > 1 and "rows" in parts[1]:
-                out["row_count"] = int(parts[1].split()[0])
-            return out
-    return {"size_bytes": None, "row_count": None}
-
-
-def column_stats(spark: SparkSession, table: str, column: str) -> dict:
-    """Per-column catalog stats (after ``analyze_table(..., columns=...)``):
-    distinct_count/min/max/num_nulls as strings, absent keys -> None."""
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table} {column}").collect()
-    info = {r.info_name: r.info_value for r in rows}
-    return {
-        "distinct_count": info.get("distinct_count"),
-        "min": info.get("min"),
-        "max": info.get("max"),
-        "num_nulls": info.get("num_nulls"),
-    }
-
-
-# ---------------------------------------------------------------------------
-# Small-file compaction
-# ---------------------------------------------------------------------------
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    target_mb: int = 128,
-    cluster_by: list[str] | None = None,
-) -> int:
-    """Rewrite a parquet directory into ~``target_mb``-sized files;
-    returns the output file count.
-
-    Why this is a first-class operator: every incremental producer
-    (streaming micro-batches, per-partition appends) accretes small
-    files, and at 100 TB the resulting listing + footer + task-per-file
-    overheads dominate scan cost long before IO does. Output file count
-    is sized from the ACTUAL input bytes (driver-side file metadata — a
-    listing, not a data read). With ``cluster_by`` the rewrite range-
-    partitions on those columns so each output file covers a narrow
-    key range and parquet min/max stats prune files for later predicates
-    (same idea as write_zordered, one dimension).
-    """
-    import math
-    import os
-    from urllib.parse import unquote, urlparse
-
-    df = spark.read.parquet(src_path)
-    total = 0
-    for f in df.inputFiles():
-        p = urlparse(f)
-        if p.scheme in ("file", ""):
-            # inputFiles() returns percent-encoded URIs (spaces -> %20)
-            total += os.path.getsize(unquote(p.path))
-        else:  # non-local FS: fall back to the Hadoop FileSystem API
-            jvm = spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(f)
-            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            total += fs.getFileStatus(jpath).getLen()
-    n_files = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    out = (
-        df.repartitionByRange(n_files, *cluster_by)
-        if cluster_by
-        else df.repartition(n_files)
-    )
-    out.write.mode("overwrite").parquet(dst_path)
-    return n_files
-
-
-def idempotent_backfill(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-) -> None:
-    """Re-run-safe backfill: overwrite ONLY the directory partitions
-    present in ``df``, leaving every other partition untouched (dynamic
-    partition overwrite). The daily-pipeline contract — re-running a
-    failed day replaces that day exactly, never truncates the table —
-    without a lakehouse format: Spark's INSERT OVERWRITE semantics on
-    plain parquet directories.
-
-    STATIC overwrite mode (Spark's default) would drop the whole table
-    first; the conf is set per-write here so the session default is
-    never mutated for other writers.
-    """
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
+__all__ = [
+    "spread_if_narrow",
+    "cluster_if_narrow",
+    "salted_join",
+    "key_skew_stats",
+    "bloom_reduced_join",
+]

@@ -268,8 +268,8 @@ def resize_images(
     The default resampler is a deterministic fake: "pixel" i of the resized
     image is byte ``(i*31) % 32`` of sha256(payload) (31 is coprime to 32,
     so the walk covers every digest byte uniformly). ``px_sum`` stays an
-    exact int64 so downstream means divide once (round-1 float-accumulation
-    lesson). With ``real_decode=True``, PNG payloads are actually decoded
+    exact int64 so downstream means divide once (float accumulation
+    breaks hash parity). With ``real_decode=True``, PNG payloads are actually decoded
     (stdlib inflate) and nearest-neighbor resampled to the target size.
     """
     n_px = int(target_w) * int(target_h)

@@ -186,7 +186,7 @@ def ivf_centroid_values(n_cells: int, dim: int) -> list[list[float]]:
 def dot_py(a: list[float], b: list[float]) -> float:
     """Left-fold dot product — the exact accumulation order of the engine's
     F.aggregate fold (and of DuckDB's list_dot_product, bit-identity
-    verified by the round-1 cosine oracles)."""
+    verified by the cosine oracles)."""
     acc = 0.0
     for x, y in zip(a, b):
         acc = acc + x * y

@@ -138,10 +138,10 @@ def quality_score(text_col: Column | str) -> Column:
     # size(regexp_extract_all(c, '[A-Za-z0-9]')): the extract_all form
     # allocates one array element PER CHARACTER, and the resulting GC
     # pressure is what capped this scan at 1.6x going 8 -> 32 cores on
-    # the r12 CPU-scaling probe (allocation-bound, not CPU-bound). Same
+    # a CPU-scaling probe (allocation-bound, not CPU-bound). Same
     # integer by construction (single-char matches can't overlap), same
     # NULL propagation; value identity pinned in
-    # tests/test_r12_optimizations.py.
+    # tests/test_extensions.py.
     n_alnum = n_chars - F.length(F.regexp_replace(c, "[A-Za-z0-9]", ""))
     n_stop = stopword_hits(tokens, "en")
 
@@ -164,9 +164,9 @@ def word_ngrams(tokens: Column, n: int) -> Column:
     runs the matching branch per row).
 
     Grams are built as a fold of ``zip_with`` over n shifted whole-array
-    slices (r11 optimization round): slice j is the token array offset by
+    slices: slice j is the token array offset by
     j, and each zip_with appends one token + separator to every gram in
-    a single linear pass. This replaces the r7 shape
+    a single linear pass. This replaces the earlier shape
     (``transform(sequence(1, count), i -> concat(element_at...))``),
     which itself replaced per-gram sub-array slices (2.8x slower still).
     Measured at sf0.1: dsir's bigram stage 1.71 s -> 0.84 s, the MinHash

@@ -79,7 +79,7 @@ def l2_normalize(
     """Unit-normalize each vector: (vec_id, norm, unit array<double>).
 
     Norm uses the same left-fold dot product as the cosine ops (bit-identical
-    to DuckDB's list_dot_product, verified round 1); zero vectors pass
+    to DuckDB's list_dot_product, verified by the cosine oracles); zero vectors pass
     through unchanged with norm 0 rather than dividing by zero.
     """
     vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))

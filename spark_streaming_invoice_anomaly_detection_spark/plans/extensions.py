@@ -208,12 +208,12 @@ def _minhash_oracle(
     """Full MinHash-LSH oracle with the band-bucket cap parameterized —
     shared by the standard query (cap far above the content-bound
     envelope) and the cap-binding variant (cap=3 BINDS at driver SFs,
-    so the drop-the-mega-bucket branch gets its own external rows,
-    round-7 VERDICT "missing" #2). ``threshold`` defaults to the
-    registered _MH_THRESHOLD; the r10 threshold-sweep query passes 0.0
-    to get every verified candidate with its exact Jaccard. ``aug_sql``
-    swaps the pair corpus (default: the shared suffix-copy augmentation;
-    the r10 recall matrix passes its four-plant corpus)."""
+    so the drop-the-mega-bucket branch gets its own external rows).
+    ``threshold`` defaults to the registered _MH_THRESHOLD; the
+    threshold-sweep query passes 0.0 to get every verified candidate
+    with its exact Jaccard. ``aug_sql`` swaps the pair corpus (default:
+    the shared suffix-copy augmentation; the recall matrix passes its
+    four-plant corpus)."""
     if threshold is None:
         threshold = _MH_THRESHOLD
     if aug_sql is None:
@@ -277,8 +277,7 @@ register(
 #: measured via the oracle's bands CTE: max 8 at sf0.001, 6 at sf0.01 —
 #: cap 3 drops ~70 buckets at each), so the drop-the-mega-bucket branch
 #: and the bounded-recall HAVING mirror get external rows of their own
-#: instead of riding a cap that never fires below the x100 probe
-#: (round-7 VERDICT "missing" #2).
+#: instead of riding a cap that never fires below the x100 probe.
 _MH_BINDING_CAP = 3
 
 
@@ -463,7 +462,7 @@ _EMB_THRESHOLD = 0.8
 _EMB_PLANES, _EMB_DIM = 4, 64
 
 #: Plane pool size: must cover the largest plane budget any oracle in this
-#: module enumerates. The adaptive budgets below are 16 (r7, raised from
+#: module enumerates. The adaptive budgets below are 16 (raised from
 #: 12): the x100 probe measured embedding_neardup_pairs at ladder depth
 #: p=11 of the old budget — one corpus doubling from saturation, where
 #: block size would resume growing and pair work turn quadratic. Budget
@@ -521,7 +520,7 @@ def _q_embedding_neardups_at(target_block: int):
 
 
 #: Candidates blocked by label x adaptive RP-LSH bucket, exact cosine as
-#: the verifier — the bare label block of round 1 was an unbounded O(n^2)
+#: the verifier — a bare label block would be an unbounded O(n^2)
 #: self-join. Scaled planted copies keep their direction, hence their
 #: bucket.
 q_embedding_neardups = _q_embedding_neardups_at(_EMB_TARGET_BLOCK)
@@ -603,7 +602,7 @@ register(
     )
 )
 
-#: Deep-ladder variant (r6 VERDICT #6): target_block=1 forces the adaptive
+#: Deep-ladder variant: target_block=1 forces the adaptive
 #: modulus to a DEEP step even at driver SFs — at sf0.01 (N=1000 augmented,
 #: 10 labels) the ladder picks p=7 (modulus 128) vs the standard query's
 #: p=2, so the engine/oracle parity of the guarded signature's high planes
@@ -667,7 +666,7 @@ def q_similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowest-margin bit-flip buckets (multi-probe): 3 of 16 buckets scanned.
     The hyperplanes are h60-derived literals, so the whole plan — bucket
     assignment, probe set, cosine ranking — is deterministic and fully
-    value-hash oracled (unlike round 1's single-probe rows-only entry)."""
+    value-hash oracled (unlike a single-probe rows-only entry)."""
     emb = load_table(spark, "embeddings", sf_dir)
     return S.lsh_topk(
         emb, QUERY_VEC, k=_TOPK, num_planes=_LSH_PLANES, dim=64,
@@ -918,8 +917,8 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas stub, aggregate per modality. The decode emits both the raw
     sha256 first byte (int) and the normalized feature; the average uses the
     int byte — sum exact in int64, ONE double division at the end — so the
-    result is independent of partial-agg accumulation order (round-1 hash
-    mismatch: summing b/255.0 doubles diverged from DuckDB in the last ulp).
+    result is independent of partial-agg accumulation order (summing
+    b/255.0 doubles diverged from DuckDB in the last ulp).
     """
     from ..operators.multimodal import decode_assets, synthesize_assets
 
@@ -1385,7 +1384,7 @@ register(
 
 
 def q_neardup_components_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same canonical mapping via algorithm="auto" (r9): min-label
+    """Same canonical mapping via algorithm="auto": min-label
     propagation with the frontier-stall probe that switches to star
     mid-run on long-chain topologies (operators/graph.py:
     _cc_propagation). On the near-dup graph the frontier collapses
@@ -1702,7 +1701,7 @@ def q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     aug = docs.unionByName(
         docs.select((F.col("doc_id") + _AUG_OFFSET).alias("doc_id"), "text")
     )
-    # r11: tokens hoisted into their own projection — the old lambda
+    # tokens hoisted into their own projection — the old lambda
     # body referenced the raw tokenize expression, so the regexp re-ran
     # once per CHUNK (n_tokens/25 times per doc). Output identical.
     toked = aug.select("doc_id", X.tokenize(F.col("text")).alias("_toks"))
@@ -2046,9 +2045,9 @@ def q_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the limit is stable. TakeOrderedAndProject: no global sort.
     """
     docs = spread_if_narrow(load_table(spark, "documents", sf_dir))
-    # hoisted token projection + zip_with over shifted slices (r11): the
+    # hoisted token projection + zip_with over shifted slices: the
     # old transform(sequence) lambda referenced the raw tokenize
-    # expression, re-running the regexp per bigram position (r7 trap);
+    # expression, re-running the regexp per bigram position;
     # measured 0.86 s -> 0.56 s at sf0.1, output byte-identical.
     toked = docs.select(X.tokenize(F.col("text")).alias("_toks"))
     toks = F.col("_toks")
@@ -2319,7 +2318,7 @@ def q_label_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     == trace pins the eigensolve to it via the spectrum_ok flag whose
     oracle twin is literal TRUE. The raw top-eigenvalue surface stays on
     operators.vectors.label_top_eigenvalue (numpy ground truth
-    pytest-pinned in tests/test_round2_ops.py)."""
+    pytest-pinned in tests/test_extensions.py)."""
     from ..operators.vectors import label_spectrum_checked
 
     emb = load_table(spark, "embeddings", sf_dir)
@@ -2875,7 +2874,7 @@ def q_bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     BM25's idf needs no greatest() guard: an absent term (df=0) zeroes
     every tf, and 2N-2df+1 >= 1 keeps fp_log2 defined.
 
-    int64 bound (r9 ADVICE): the rescaled numerator/denominator products
+    int64 bound: the rescaled numerator/denominator products
     hold exactly while corpus_len * max(tf) < 2^63 / 22 ~ 4.2e17 (e.g.
     a 10^13-token corpus with 40k-occurrence docs). Past that, divide
     the 40L rescale by a power of two on BOTH sides, or cast corpus_len
@@ -2892,7 +2891,7 @@ def q_bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     POST-map-side-combine frame — one narrow (doc_id, dl, tf*) row per
     document, not per token.
 
-    Match-prefilter rejection (r9 VERDICT #6, measured r10): restricting
+    Match-prefilter rejection: restricting
     the per-doc branch to docs containing >= 1 query term (regex
     boundary-anchored prefilter + array-projection tf, zero-shuffle, with
     an exact 20-doc zero-match fill to keep byte-parity) was built and
@@ -3444,8 +3443,8 @@ register(
 #: p=4 at sf0.1 (N=2000, exactly the previous fixed-4-plane blocks), p=8
 #: at the x10 probe (N=20000), p=9 at x30 — the x30 run against an 8-plane
 #: budget measured 7.3x wall (ceiling reached, blocks growing again);
-#: budget 16 (r7, was 12) holds the constant-block regime to ~8.2M
-#: vectors; the r7 x100 probe (N=200k, p=11) measured 8.5x wall at 100x
+#: budget 16 (was 12) holds the constant-block regime to ~8.2M
+#: vectors; the x100 probe (N=200k, p=11) measured 8.5x wall at 100x
 #: data with the ladder mid-range.
 _HN_PMAX = 16
 _HN_TARGET_BLOCK = 125
@@ -3936,7 +3935,7 @@ register(
 # at every shipped SF (smallest stratum is ~6 docs at sf0.001): a quota at
 # or above the stratum size would keep every row and leave the hash-rank
 # ordering dead code under the default oracle gate (the vacuous-validation
-# class r2's ADVICE flagged); tests/test_extensions.py pins that at least
+# class); tests/test_extensions.py pins that at least
 # one stratum drops rows.
 _CURR_QUOTA = 3
 
@@ -4341,7 +4340,7 @@ def q_quality_calibration_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-source and global grids together, then a broadcast join on
     the 9-row grid; the corpus is never sorted.
     """
-    # r11: spread the one-file scan before the regex-heavy scoring (the
+    # spread the one-file scan before the regex-heavy scoring (the
     # four quality_score regexp passes per doc were single-threaded on
     # the narrow scan; GK sketches merge order-independently in the
     # exact regime, so the 32-way partial agg is value-identical).
@@ -4862,7 +4861,7 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# r10: batching / class-balance / tokenizer observability
+# Batching / class-balance / tokenizer observability
 # ---------------------------------------------------------------------------
 
 
@@ -5883,7 +5882,7 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Round 10: order-insensitive dedup, corpus-overlap measures, chunk planning
+# Order-insensitive dedup, corpus-overlap measures, chunk planning
 # ---------------------------------------------------------------------------
 
 
@@ -6304,7 +6303,7 @@ def q_source_bigram_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_if_narrow(
         load_table(spark, "documents", sf_dir).select("source", "text")
     )
-    # hoisted token projection + zip_with bigrams (r11; see q_bigram_topk
+    # hoisted token projection + zip_with bigrams (see q_bigram_topk
     # — same per-element re-tokenization trap, same byte-identical fix)
     toked = docs.select("source", X.tokenize(F.col("text")).alias("_toks"))
     toks = F.col("_toks")
@@ -6594,7 +6593,7 @@ _SWEEP_THRESHOLDS = (0.2, 0.3, 0.5, 0.7, 0.9)
 
 
 #: Slice modulus for the routine-cadence variants of the two heavy dedup
-#: audits (r10 VERDICT "Next round" #6): doc_id % 5 keeps ~1/5 of the
+#: audits: doc_id % 5 keeps ~1/5 of the
 #: base corpus before planting/augmenting, cutting candidate-pair work
 #: ~25x while preserving the planted pair structure (both sides of a
 #: plant share the base doc_id, so a sliced base keeps whole pairs).
@@ -6616,7 +6615,7 @@ def q_minhash_threshold_sweep(
     Both census columns come from ONE groupBy over the exploded-ids
     frame (each surviving pair contributes exactly 2 id rows, so
     ``n_pairs = count/2``) — no join at all, which also removes the
-    fragile DOUBLE-threshold join key the r10 ADVICE flagged.
+    fragile DOUBLE-threshold join key.
 
     Audit cadence: once-per-corpus-revision tuning audit (same contract
     as ``dedup_recall_matrix``), not a routine query — at x100 it
@@ -6792,7 +6791,7 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Span-level exact-substring dedup (Lee et al. 2022 — r10 VERDICT #1)
+# Span-level exact-substring dedup (Lee et al. 2022)
 # ---------------------------------------------------------------------------
 
 #: Span sampling parameters, sized for the ~54-token test docs: 8-token
@@ -7059,7 +7058,7 @@ _RECALL_PLANTS = (
     ("token_reversed", 3_000_000),
     ("prefix_truncated", 4_000_000),
     ("head_dropped", 5_000_000),
-    # r11: a ~30% chunk of the doc spliced MID-DOCUMENT between two
+    # a ~30% chunk of the doc spliced MID-DOCUMENT between two
     # char-reversed fillers (reversed text shares no token spans with the
     # forward text) — the Lee et al. 2022 quoted-chunk case. Not exact,
     # different bag, longer than the base (no prefix containment), and
@@ -7078,7 +7077,7 @@ def q_dedup_recall_matrix(
     adds token reorderings; prefix-containment adds truncations;
     MinHash-LSH adds head-dropped near-dups and (at Jaccard ~0.6)
     truncations, but not reorderings (3-gram shingles break); the
-    substring_span modality (r11, Lee et al. 2022) adds verbatim chunks
+    substring_span modality (Lee et al. 2022) adds verbatim chunks
     spliced INSIDE otherwise-distinct documents, which every doc-level
     detector misses.
 
@@ -7374,8 +7373,8 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Repeated-line boilerplate census (CCNet / RefinedWeb line-level dedup —
-# r10 VERDICT "Next round" #2). Companion to the span detector above: line
+# Repeated-line boilerplate census (CCNet / RefinedWeb line-level
+# dedup). Companion to the span detector above: line
 # dedup is the cheap exhaustive pass real pipelines run BEFORE MinHash.
 # ---------------------------------------------------------------------------
 
@@ -7788,7 +7787,7 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Post-dedup mixture drift (r11): dedup changes the mixture you sampled.
+# Post-dedup mixture drift: dedup changes the mixture you sampled.
 # ---------------------------------------------------------------------------
 
 
@@ -7951,7 +7950,7 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# PII scrub plan (r11): the C4/RefinedWeb redaction pass, census + plan.
+# PII scrub plan: the C4/RefinedWeb redaction pass, census + plan.
 # ---------------------------------------------------------------------------
 
 #: PII patterns, deliberately restricted to the regex subset whose
@@ -7992,11 +7991,11 @@ def q_pii_scrub_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     division. Plan: ONE corpus scan into a 20-row hash agg (map-side
     combined) — the regex work is codegen-side, no explode, no Python.
 
-    r12: the scan is spread when narrow — this query is six
+    The scan is spread when narrow — this query is six
     regexp_extract_all passes per document (exactly the regex-heavy
-    per-row profile that cleared the spread bar in r11's measurements),
-    and it landed mid-BUILD in r11 without the guard, so at driver SFs
-    the whole regex stage ran on the one-file scan's single task. The
+    per-row profile that cleared the spread bar when measured); without
+    the guard, at driver SFs the whole regex stage ran on the one-file
+    scan's single task. The
     exchange carries raw rows but the agg above is 20 rows; no-op on a
     real multi-split scan.
     """
@@ -8130,7 +8129,7 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Encoding integrity census (r11): mojibake / control-char artifacts.
+# Encoding integrity census: mojibake / control-char artifacts.
 # ---------------------------------------------------------------------------
 
 #: Artifact plants for the encoding census (the word-salad corpus is
@@ -8274,7 +8273,7 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Cleaning funnel report (r11 capstone): the end-to-end survivor funnel.
+# Cleaning funnel report: the end-to-end survivor funnel.
 # ---------------------------------------------------------------------------
 
 
@@ -8550,7 +8549,7 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Vocabulary growth curve (r11): Heaps-law audit per source.
+# Vocabulary growth curve: Heaps-law audit per source.
 # ---------------------------------------------------------------------------
 
 

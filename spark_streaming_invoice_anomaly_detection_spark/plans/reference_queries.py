@@ -30,7 +30,7 @@ def q_invoice_featurize(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic (see functions.exactmath) so it's oracle-hashable;
     min/max/count/sum-of-integer-valued-doubles are exact as-is.
 
-    r11: the scan is keyed-spread when narrow (cluster_if_narrow) so the
+    The scan is keyed-spread when narrow (cluster_if_narrow) so the
     aggregation runs cluster-wide behind ONE exchange instead of
     single-threaded in front of it; no-op on a real multi-split scan,
     where the map-side-combine shape above is unchanged. Values are
@@ -155,7 +155,7 @@ register(
 
 # ---------------------------------------------------------------------------
 # Composite flagship: A1 featurization ⋈ customer dim + ranking window
-# (round-5 VERDICT #3 — entry() should exercise >=3 operator classes)
+# (entry() exercises >=3 operator classes)
 # ---------------------------------------------------------------------------
 
 

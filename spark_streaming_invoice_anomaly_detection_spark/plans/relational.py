@@ -1120,7 +1120,7 @@ def q_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     regime (group size <= accuracy) the sketch returns a true order
     statistic matching DuckDB's quantile_disc bit-for-bit, so this carries
     a full hash oracle; the accuracy bound for the approximate regime is
-    additionally pytest-pinned (tests/test_round2_ops.py).
+    additionally pytest-pinned (tests/test_extensions.py).
     """
     ev = _t(spark, sf_dir, "events")
     # Scalar projections, not the raw quartile array: the driver's
@@ -2201,8 +2201,8 @@ def q_nation_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     supp = _t(spark, sf_dir, "supplier")
     nation = _t(spark, sf_dir, "nation")
-    # 'widget' occurs in the generated part names ('red widget', ...); the
-    # r2 filter ('%1%') matched nothing and validated an empty result.
+    # 'widget' occurs in the generated part names ('red widget', ...); a
+    # '%1%' filter matched nothing and validated an empty result.
     part = _t(spark, sf_dir, "part").filter(F.col("p_name").contains("widget"))
     disc_s = scaled_long(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
     cost_s = scaled_long(
@@ -2260,7 +2260,7 @@ register(
 # ---------------------------------------------------------------------------
 
 # Literals must exist in the testdata or the share ratio is never exercised
-# (r2 ADVICE: region names are AFRICA/AMERICA/ASIA/EUROPE/MIDDLE EAST).
+# (region names are AFRICA/AMERICA/ASIA/EUROPE/MIDDLE EAST).
 _Q8_NATION = "NATION_1"
 _Q8_REGION = "ASIA"
 
@@ -2439,7 +2439,7 @@ def q_part_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = _t(spark, sf_dir, "part")
     bad_supp = (
         _t(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") < 1000)  # non-empty in testdata (r2 ADVICE)
+        .filter(F.col("s_acctbal") < 1000)  # non-empty in testdata
         .select("s_suppkey")
     )
     pairs = (

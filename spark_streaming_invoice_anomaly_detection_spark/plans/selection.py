@@ -73,9 +73,9 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side into the per-(doc, bucket) histogram ``dbc`` (<= B rows per
     doc — bounded regardless of document length), which is materialized
     once (localCheckpoint) and feeds both branches: the B-row global
-    bucket stats and the per-doc weight fold. The r5 shape recomputed
-    the gram explode per branch — two full regex-tokenization passes
-    over the corpus; materializing the bounded histogram instead costs
+    bucket stats and the per-doc weight fold. Recomputing the gram
+    explode per branch costs two full regex-tokenization passes over
+    the corpus; materializing the bounded histogram instead costs
     ~B rows/doc of executor storage (64 x n_docs — at 1B docs and B=64,
     ~30 bytes/row spread over the cluster) and halves the dominant map
     work (measured 2.81 s -> ~1.7 s at sf0.1). w_fp = sum(cnt * s_b) is
@@ -88,13 +88,13 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     single document of ~2.8e14 grams; corpus-scale counts only ever
     appear INSIDE fp_log2 arguments, never as factors.
 
-    r11 (optimization round): the bigram builder is ``zip_with`` over two
+    The bigram builder is ``zip_with`` over two
     shifted slices of a HOISTED token projection, replacing
     ``transform(sequence(1, n-1), i -> concat_ws(element_at, element_at))``
     over the raw ``tokenize(text)`` expression. Two stacked effects, both
     byte-identical in output: the old lambda body referenced the
     un-hoisted token expression, so CollapseProject inlined the regexp
-    tokenizer into the per-ELEMENT loop (the r7 higher-order-function
+    tokenizer into the per-ELEMENT loop (the higher-order-function
     trap, word_ngrams' sibling), and per-position ``element_at`` pairs
     cost more than one linear ``zip_with`` pass. Measured on the dbc
     histogram stage at sf0.1: 1.71 s -> 0.84 s; query end-to-end
@@ -914,9 +914,9 @@ _UNIMAX_EPOCH_CAP = 2
 
 #: Character budget as a fraction of total corpus mass (9/5 of total =
 #: 90% of the epoch-capped mass). A FRACTION, not an absolute count, so
-#: the query is scale-free (the r3 fixed-count lesson); sized so the
-#: smallest sources saturate and the largest stay at the waterfill level
-#: at the driver-gate SFs (3 saturate at sf0.001, 2 at sf0.01; sf0.1's
+#: the query is scale-free (a fixed count degenerates as SF grows);
+#: sized so the smallest sources saturate and the largest stay at the
+#: waterfill level at the driver-gate SFs (3 saturate at sf0.001, 2 at sf0.01; sf0.1's
 #: masses are too uniform to saturate — the saturated branch there is
 #: pinned by tests/test_selection.py on a planted skewed corpus).
 _UNIMAX_BUDGET_NUM = 9
@@ -1079,7 +1079,7 @@ register(
 # ---------------------------------------------------------------------------
 
 #: Eval-set size as a fraction of the corpus: K = N div 50 (2%). A
-#: fraction, not an absolute count (scale-free, the r3 lesson).
+#: fraction, not an absolute count (scale-free).
 _QUOTA_DEN = 50
 
 
@@ -1298,7 +1298,7 @@ def q_eval_split_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     proportional with zero binomial noise (the property hash-threshold
     sampling cannot give).
 
-    Plan (r9 VERDICT #5 — don't sort what the quota will discard): a
+    Plan (don't sort what the quota will discard): a
     full per-source window rank sorts 100% of the corpus to keep 2%.
     Instead, two-phase:
 
@@ -1318,7 +1318,7 @@ def q_eval_split_members(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The window sort now touches ~2.16% of rows instead of 100% — the
     at-100TB difference between sorting the corpus and sorting an
-    eval-sized sliver. Measured honestly at sf0.1 (r10, idle box,
+    eval-sized sliver. Measured honestly at sf0.1 (idle box,
     min-of-5): the two-phase plan is SLOWER there — 1.08 s vs 0.61 s
     for the plain window — because at 5,000 docs the sort is free and
     the extra fixed job costs (sketch agg, survivor count, two
@@ -1461,7 +1461,7 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Eval-set decontamination (round 10): compose the Hamilton eval split with
+# Eval-set decontamination: compose the Hamilton eval split with
 # the MinHash-LSH near-dup detector — the audit every benchmark-holdout
 # pipeline runs before trusting its eval numbers.
 # ---------------------------------------------------------------------------
@@ -1586,12 +1586,11 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Doc-level repetition plan: materialize the UniMax allocation (round 10).
+# Doc-level repetition plan: materialize the UniMax allocation.
 # ---------------------------------------------------------------------------
 
 
-#: Histogram-prefilter bucket bits for q_repetition_plan (r10 VERDICT
-#: "Next round" #5). h60 is uniform on [0, 2^60) by construction, so a
+#: Histogram-prefilter bucket bits for q_repetition_plan. h60 is uniform on [0, 2^60) by construction, so a
 #: fixed-width histogram over the rank key's top ``bits`` bits gives the
 #: EXACT cumulative char mass per bucket in one tiny hash-agg — the
 #: weighted-quantile the greedy char-prefix cut needs, with no sketch
@@ -1719,7 +1718,7 @@ def q_repetition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: everything is int64 (floor div / mod / running sum);
     ``realized_epochs`` is one correctly-rounded double division.
-    Plan (r10 VERDICT #5 — the 100 TB claim is now code, not prose):
+    Plan:
     the 20-row allocation localCheckpoints, and the per-source running
     sum runs a WEIGHTED-QUANTILE analogue of eval_split_members' GK
     prefilter two-phase cut instead of windowing 100% of the corpus.

@@ -22,7 +22,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 #: Error envelope the rollup check licenses: DataSketches HLL at the
 #: default lg_k=12 has rsd ~1.6%; 5% = ~3 sigma, same bound the pytest
-#: accuracy pin has held across all SFs since round 2.
+#: accuracy pin holds across all SFs.
 _ROLLUP_BOUND = 0.05
 
 

@@ -74,48 +74,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def cluster_conf(
-    executors: int,
-    cores_per_executor: int = 4,
-    executor_mem_gb: int = 16,
-    target_partition_mb: int = 128,
-) -> dict[str, str]:
-    """Recommended conf for a real cluster — the knobs this repo's
-    local-mode defaults stand in for, derived from first principles:
-
-    - shuffle partitions: 2-3 tasks per core per stage wave (here 2x
-      total cores) so AQE can coalesce down rather than starve up;
-    - maxPartitionBytes: the scan-side partition target;
-    - advisory partition size: what AQE coalesces shuffle outputs toward;
-    - per-partition memory sanity: a partition must fit several times
-      into the executor's per-core share (raise executor_mem_gb or lower
-      target_partition_mb if the returned ratio is < 4).
-
-    Returned as a plain dict for ``get_spark(extra_conf=...)`` or
-    spark-submit ``--conf`` lines. At 100 TB input with 128 MB scan
-    partitions a full pass is ~800k tasks; 1000 executors x 4 cores chew
-    that in ~200 task waves — the arithmetic to sanity-check any job.
-    """
-    total_cores = executors * cores_per_executor
-    shuffle_partitions = max(total_cores * 2, 64)
-    per_core_mb = (executor_mem_gb * 1024) // max(cores_per_executor, 1)
-    headroom = per_core_mb // max(target_partition_mb, 1)
-    return {
-        "spark.executor.instances": str(executors),
-        "spark.executor.cores": str(cores_per_executor),
-        "spark.executor.memory": f"{executor_mem_gb}g",
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
-        "spark.sql.files.maxPartitionBytes": str(
-            target_partition_mb * 1024 * 1024
-        ),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(
-            target_partition_mb * 1024 * 1024
-        ),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        # informational: partitions-per-core memory headroom (see doc)
-        "spark.invoice_engine.partition_mem_headroom": str(headroom),
-    }

@@ -43,7 +43,7 @@ _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 #: SHARED-HANDLE CONTRACT: the memoized DataFrame is the same object for
 #: every consumer — never ``.cache()``/``.persist()`` a handle returned by
 #: ``load_table`` (it would silently pin cached data for every other query
-#: in the session; pinned by tests/test_r12_optimizations.py). Persist a
+#: in the session; pinned by tests/test_sources.py). Persist a
 #: derived frame (``df.select(...)``) instead.
 _TABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
 _TABLE_CACHE_APP: str | None = None

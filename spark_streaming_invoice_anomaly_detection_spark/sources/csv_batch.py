@@ -62,53 +62,3 @@ def load_and_featurize_training_csv(
 
     lines = load_training_csv(spark, path, infer_schema)
     return filter_valid_invoices(featurize_invoices(lines))
-
-
-#: check_csv.py's date conformity pattern, `%m/%d/%Y %H:%M`
-#: (scripts/check_csv.py:19), as the Spark datetime format string.
-AUDIT_DATE_FORMAT = "M/d/yyyy H:mm"
-
-_AUDIT_FIELDS = [
-    "InvoiceNo",
-    "StockCode",
-    "Description",
-    "Quantity",
-    "InvoiceDate",
-    "UnitPrice",
-    "CustomerID",
-    "Country",
-]
-
-
-def csv_audit(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed twin of the reference's data-quality audit
-    (scripts/check_csv.py:1-65): per-field empty counts, bad-line count
-    (short row or non-numeric Quantity/UnitPrice), and date-format
-    conformity against ``M/d/yyyy H:mm`` — one aggregate row.
-
-    The reference audits production.csv single-threaded on the driver; at
-    100 TB the same census is one scan with conditional aggregates (all
-    map-side combined, output is a single row).
-    """
-    raw = spark.read.option("header", True).schema(
-        ", ".join(f"`{f}` string" for f in _AUDIT_FIELDS)
-    ).csv(path)
-
-    def empty(f: str):
-        c = F.col(f)
-        return (c.isNull() | (F.trim(c) == "")).cast("long")
-
-    bad = (
-        F.col("Country").isNull()  # short row: trailing fields null
-        | F.col("Quantity").try_cast("int").isNull()
-        | F.col("UnitPrice").try_cast("double").isNull()
-    )
-    date_ok = F.try_to_timestamp(
-        F.col("InvoiceDate"), F.lit(AUDIT_DATE_FORMAT)
-    ).isNotNull()
-    return raw.agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.sum(bad.cast("long")).alias("n_bad_lines"),
-        F.sum((~date_ok).cast("long")).alias("n_invalid_dates"),
-        *[F.sum(empty(f)).alias(f"empty_{f.lower()}") for f in _AUDIT_FIELDS],
-    )

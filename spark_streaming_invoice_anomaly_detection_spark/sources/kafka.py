@@ -84,10 +84,3 @@ def kafka_sink(topic: str, brokers: str):
         writer.save()
 
     return write
-
-
-def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
-    """File-based line source (test/replay stand-in for Kafka): each file
-    dropped into ``path`` becomes a micro-batch, like the reference's
-    simulation producer feeding the topic (InvoiceDataProducer.scala)."""
-    return spark.readStream.format("text").load(path)

@@ -67,7 +67,7 @@ def windowed_expectations(
     # explode over the already-aggregated row. The earlier unionByName over
     # N selects of the agg subtree planned one StateStoreSave PER check —
     # N stateful copies of the full per-window state and N reads of the
-    # source (round-3 ADVICE). This shape keeps exactly one.
+    # source. This shape keeps exactly one.
     checks = F.array(
         *[
             F.struct(

@@ -102,8 +102,9 @@ class _Scorer:
 class PipelineSinks:
     """Per-output delivery callables (DataFrame, epoch_id) -> None.
 
-    Defaults collect into driver-side lists — test/dev only; production
-    wires kafka_sink from sources.kafka.
+    All four are required. Production wires ``kafka_sink`` from
+    sources.kafka; ``CollectingSinks.as_sinks()`` gives driver-side
+    lists for tests.
     """
 
     erroneous: SinkFn

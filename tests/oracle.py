@@ -69,7 +69,7 @@ def assert_matches_oracle(
     )
     assert len(got) == len(want), f"[{name}] row count: spark={len(got)} duckdb={len(want)}"
     for c in got.columns:
-        # Dtype parity (round-5 VERDICT #2): the driver hashes pandas
+        # Dtype parity: the driver hashes pandas
         # REPRESENTATIONS, so int64-vs-float64 on the same column (e.g. a
         # DuckDB HUGEINT rendering 83 as 83.0) hash-fails at the driver
         # even when every value compares equal.  _normalize already folds

@@ -1,5 +1,5 @@
-"""Functional tests for round-2 additions: bucketed range join, vector
-aggregation, multimodal resize/audio plumbing, HLL sketch bound.
+"""Functional tests: bucketed range join, vector aggregation, multimodal
+resize/audio plumbing, HLL sketch bound, Arrow cogroup.
 (Cross-engine equivalence is covered by test_queries_oracle.py.)"""
 
 from __future__ import annotations
@@ -247,3 +247,56 @@ class TestDailyTrendSlope:
             and r.r2 > 0.001
             for r in rows
         )
+
+
+class TestArrowCogroup:
+    """event_attribution moved to cogrouped applyInArrow; values must
+    match the definitional range-join + re-aggregate on synthetic data,
+    including customers with no events (left-outer zero counts)."""
+
+    def test_matches_range_join(self, spark):
+        import datetime as dt
+
+        base = dt.datetime(2024, 1, 10, 12, 0, 0)
+        events = spark.createDataFrame(
+            [
+                (1, base - dt.timedelta(days=1)),
+                (1, base - dt.timedelta(days=6, hours=23)),
+                (1, base - dt.timedelta(days=8)),   # outside window
+                (2, base),                           # boundary: ts == hi
+                (3, base - dt.timedelta(days=3)),
+            ],
+            "user_id long, ts timestamp",
+        )
+        orders = spark.createDataFrame(
+            [
+                (1, 101, dt.datetime(2024, 1, 10, 12, 0, 0)),
+                (2, 102, dt.datetime(2024, 1, 10, 12, 0, 0)),
+                (3, 103, dt.datetime(2023, 12, 1, 0, 0, 0)),  # no events
+                (4, 104, dt.datetime(2024, 1, 10, 12, 0, 0)),  # no user
+            ],
+            "o_custkey long, o_orderkey long, o_orderdate timestamp",
+        )
+        from spark_streaming_invoice_anomaly_detection_spark.operators.cogroup import (
+            event_attribution,
+        )
+
+        got = {
+            r.o_orderkey: r.n_events_7d
+            for r in event_attribution(events, orders).collect()
+        }
+        # definitional range join + re-aggregate
+        j = (
+            orders.join(
+                events,
+                (events.user_id == orders.o_custkey)
+                & (events.ts > orders.o_orderdate - F.expr("INTERVAL 7 DAYS"))
+                & (events.ts <= orders.o_orderdate),
+                "left",
+            )
+            .groupBy("o_orderkey")
+            .agg(F.count("ts").alias("n"))
+        )
+        want = {r.o_orderkey: r.n for r in j.collect()}
+        assert got == want
+        assert want[103] == 0 and want[104] == 0  # left-outer zeros kept

@@ -1,4 +1,4 @@
-"""Semantic pins for the round-10 corpus-overlap / chunk-planning family
+"""Semantic pins for the corpus-overlap / chunk-planning family
 (bow_dedup_groups, weighted_jaccard_sources, doc_chunk_plan,
 token_gini_by_source, source_bigram_cosine) — invariants the DuckDB hash
 oracle cannot express (the oracle proves cross-engine equality; these
@@ -233,7 +233,7 @@ def test_dedup_recall_matrix_shape(spark, sf_dir):
     rows = E.q_dedup_recall_matrix(spark, sf_dir).collect()
     got = {(r.modality, r.plant_kind): r for r in rows}
     kinds = {k for k, _ in E._RECALL_PLANTS}
-    # the substring_span modality/plant pair (r11) has its own support
+    # the substring_span modality/plant pair has its own support
     # story pinned in tests/test_span_dedup.py
     assert set(got) == {
         (m, k)

@@ -1,8 +1,8 @@
-"""COVERAGE.md self-check (round-7 VERDICT ask #6, missed twice).
+"""COVERAGE.md self-check.
 
-The registry count stated in COVERAGE.md drifted in r7 (176 stated /
-178 actual) and again in r8 (178 stated / 181 actual) — each round's
-new registrations outran the prose. This pins the LAST "Registry: N
+The registry count stated in COVERAGE.md drifted twice (176 stated /
+178 actual, then 178 stated / 181 actual) — new registrations outran
+the prose. This pins the LAST "Registry: N
 queries (M oracled)" sentence in COVERAGE.md to the live registry so
 the document cannot go stale a third time without failing the suite.
 """
@@ -36,7 +36,7 @@ def test_coverage_doc_registry_count_is_current():
 
 
 def test_coverage_doc_rows_only_paragraph_is_current():
-    """r9 VERDICT #3: the prose 'The N rows-only entries ...' drifted
+    """The prose 'The N rows-only entries ...' once drifted
     (said five, registry had two) one paragraph below the test-pinned
     counts. Derive both the count word and the named set from
     ``registry.oracle_sql()`` so this paragraph cannot drift again."""

@@ -138,114 +138,6 @@ class TestDegenerateVectors:
         assert rows[1].c == 1.0
 
 
-class TestNgramUDTF:
-    def test_lateral_matches_native_ngrams(self, spark):
-        from spark_streaming_invoice_anomaly_detection_spark.functions.udtfs import (
-            register_udtfs,
-        )
-        from spark_streaming_invoice_anomaly_detection_spark.operators.text import (
-            tokenize,
-            word_ngrams,
-        )
-
-        register_udtfs(spark)
-        df = spark.createDataFrame(
-            [(1, "the quick brown fox jumps"), (2, "ab"), (3, "")],
-            "doc_id long, text string",
-        )
-        df.createOrReplaceTempView("udtf_docs")
-        got = {
-            (r.doc_id, r.pos): r.gram
-            for r in spark.sql(
-                "SELECT d.doc_id, g.pos, g.gram "
-                "FROM udtf_docs d, LATERAL ngrams(d.text, 3) g"
-            ).collect()
-        }
-        assert got[(1, 0)] == "the quick brown"
-        assert got[(1, 2)] == "brown fox jumps"
-        assert not any(doc == 2 for doc, _ in got)  # too short
-        # parity with the native path (distinct grams, order-free)
-        native = {
-            r.doc_id: set(r.g)
-            for r in df.select(
-                "doc_id",
-                word_ngrams(tokenize(F.col("text")), 3).alias("g"),
-            ).collect()
-        }
-        udtf_grams = {}
-        for (doc, _pos), gram in got.items():
-            udtf_grams.setdefault(doc, set()).add(gram)
-        assert udtf_grams.get(1) == native[1]
-        assert native[2] == set() and native[3] == set()
-
-    def test_null_and_zero_n(self, spark):
-        from spark_streaming_invoice_anomaly_detection_spark.functions.udtfs import (
-            register_udtfs,
-        )
-
-        register_udtfs(spark)
-        assert (
-            spark.sql("SELECT * FROM ngrams(NULL, 3)").count() == 0
-        )
-        assert spark.sql("SELECT * FROM ngrams('a b c', 0)").count() == 0
-
-    def test_non_ascii_case_fold_matches_native(self, spark):
-        """UDTF tokenization must use ASCII-only folding like
-        operators/text.tokenize — Python str.lower() would map 'İ' to
-        'i'+combining-dot and mint tokens the native path never emits
-        (round-4 ADVICE)."""
-        from spark_streaming_invoice_anomaly_detection_spark.functions.udtfs import (
-            register_udtfs,
-        )
-        from spark_streaming_invoice_anomaly_detection_spark.operators.text import (
-            tokenize,
-            word_ngrams,
-        )
-
-        register_udtfs(spark)
-        # Turkish dotted-İ, German ß/SS, fullwidth ＡＢＣ, Cyrillic — all
-        # must be left unfolded; only ASCII A-Z folds.
-        text = "İstanbul GROSSE Straße ＡＢＣ МОСКВА Mixed CASE abc"
-        df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-        df.createOrReplaceTempView("udtf_unicode_docs")
-        udtf_grams = {
-            r.gram
-            for r in spark.sql(
-                "SELECT g.gram FROM udtf_unicode_docs d, "
-                "LATERAL ngrams(d.text, 2) g"
-            ).collect()
-        }
-        native_grams = set(
-            df.select(
-                word_ngrams(tokenize(F.col("text")), 2).alias("g")
-            ).first()["g"]
-        )
-        assert udtf_grams == native_grams
-        # and the fold really was ASCII-only: 'İstanbul' keeps its İ so
-        # the token is 'stanbul' (İ is non-ASCII, splits the run)
-        assert any("stanbul" in g for g in udtf_grams)
-        assert not any("istanbul" in g for g in udtf_grams)
-
-
-class TestClusterConf:
-    def test_sizing_arithmetic(self):
-        from spark_streaming_invoice_anomaly_detection_spark.session import cluster_conf
-
-        c = cluster_conf(executors=1000, cores_per_executor=4,
-                         executor_mem_gb=16, target_partition_mb=128)
-        assert c["spark.sql.shuffle.partitions"] == "8000"  # 2x cores
-        assert int(c["spark.sql.files.maxPartitionBytes"]) == 128 * 1024**2
-        # 4 GB per core / 128 MB partitions -> 32x headroom
-        assert int(c["spark.invoice_engine.partition_mem_headroom"]) == 32
-        assert c["spark.sql.adaptive.enabled"] == "true"
-
-    def test_floor_on_tiny_cluster(self):
-        from spark_streaming_invoice_anomaly_detection_spark.session import cluster_conf
-
-        c = cluster_conf(executors=2, cores_per_executor=2)
-        assert int(c["spark.sql.shuffle.partitions"]) == 64  # floor
-
-
 class TestEmptySketchesAndCuration:
     def test_hll_rollup_empty(self, spark):
         from spark_streaming_invoice_anomaly_detection_spark.operators import (
@@ -304,16 +196,6 @@ class TestEmptySketchesAndCuration:
         ).write.parquet(os.path.join(d, "documents.parquet"))
         assert q_corpus_shuffle(spark, d).count() == 0
         assert q_token_budget_sample(spark, d).count() == 0
-
-    def test_compact_empty_directory_of_files(self, spark, tmp_path):
-        from spark_streaming_invoice_anomaly_detection_spark.operators import layout
-
-        src = str(tmp_path / "src")
-        spark.createDataFrame([], "a long").repartition(3).write.parquet(src)
-        dst = str(tmp_path / "dst")
-        n = layout.compact_parquet(spark, src, dst, target_mb=128)
-        assert n == 1
-        assert spark.read.parquet(dst).count() == 0
 
 
 def test_mmr_pool_smaller_than_k(spark, tmp_path):

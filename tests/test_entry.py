@@ -25,7 +25,7 @@ def test_entry_returns_rows(spark):
 
 
 def test_entry_plan_is_composite(spark):
-    """Round-5 VERDICT #3: entry()'s plan must show a join AND a window
+    """entry()'s plan must show a join AND a window
     (on top of the A1 hash aggregation) so the driver smoke check
     exercises >=3 operator classes."""
     mod = _load_entry_module()

@@ -1,4 +1,4 @@
-"""Keep the environmental skip census honest (round-3 VERDICT #9).
+"""Keep the environmental skip census honest.
 
 Each environmental pytest skip is gated on a probe that re-runs every
 session, so a newly available dependency flips its end-to-end test on
@@ -13,7 +13,7 @@ from __future__ import annotations
 import os
 import re
 
-#: (dependency label in COVERAGE.md row, probe) — probe takes spark.
+#: The document whose census table the tests below check.
 _CENSUS_PATH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "COVERAGE.md"
 )
@@ -39,20 +39,9 @@ def _status(available: bool) -> str:
 def test_census_table_parses():
     rows = _census_rows()
     assert set(rows) == {
-        "spark-avro external module",
         "spark-sql-kafka connector jar",
         "Kafka broker at localhost:9092",
     }
-
-
-def test_avro_census_current(spark):
-    from spark_streaming_invoice_anomaly_detection_spark.sources.formats import (
-        avro_available,
-    )
-
-    assert _census_rows()["spark-avro external module"] == _status(
-        avro_available(spark)
-    )
 
 
 def test_kafka_census_current(spark):

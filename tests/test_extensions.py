@@ -1,5 +1,6 @@
 """Functional tests for the LLM-pipeline extension operators: planted-dup
-recall, LSH behavior, text heuristics on known inputs, multimodal plumbing.
+recall, LSH behavior, text heuristics on known inputs, multimodal plumbing,
+and value-identity pins for rewritten text/quality/Jaccard expressions.
 (Cross-engine equivalence is covered by test_queries_oracle.py.)"""
 
 from __future__ import annotations
@@ -11,6 +12,20 @@ from pyspark.sql import functions as F
 from spark_streaming_invoice_anomaly_detection_spark.operators import dedup as D
 from spark_streaming_invoice_anomaly_detection_spark.operators import similarity as S
 from spark_streaming_invoice_anomaly_detection_spark.operators import text as X
+from spark_streaming_invoice_anomaly_detection_spark.operators.text import (
+    tokenize,
+    word_ngrams,
+)
+from spark_streaming_invoice_anomaly_detection_spark.plans.extensions import (
+    _PR_ITERS,
+    _PR_SCALE,
+    q_chunk_dedup,
+    q_decontamination,
+    q_embedding_quantize,
+    q_pagerank_neardup,
+    q_sequence_packing,
+)
+from spark_streaming_invoice_anomaly_detection_spark.sources import catalog
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -335,7 +350,7 @@ class TestMultimodal:
 
     def test_real_codec_decode_e2e(self, spark):
         """Genuine PNG and WAV payloads through decode_assets end-to-end:
-        the real_decode path inflates/parses actual bytes (VERDICT r2 #5),
+        the real_decode path inflates/parses actual bytes,
         not the sha256 fake."""
         from spark_streaming_invoice_anomaly_detection_spark.operators.multimodal import (
             decode_assets,
@@ -455,8 +470,8 @@ class TestCurriculumQuotaSample:
     def test_quota_binds_at_default_sf(self, spark, sf_dir):
         """The stratum cut must actually drop rows at the DEFAULT test SF —
         otherwise the hash-rank ordering is dead code and the oracle gate
-        validates nothing (the vacuous-validation class r2's ADVICE
-        flagged for dead filters)."""
+        validates nothing (the vacuous-validation class of dead
+        filters)."""
         from spark_streaming_invoice_anomaly_detection_spark.plans.extensions import (
             _CURR_QUOTA,
             q_curriculum_quota_sample,
@@ -656,7 +671,7 @@ class TestAdaptiveBucketHighPParity:
 
 
 class TestBM25:
-    """bm25_search_topk vs an independent pure-Python twin (r9).
+    """bm25_search_topk vs an independent pure-Python twin.
 
     The oracle pins cross-ENGINE agreement; this pins the ALGEBRA — the
     40L rescale constants, the fixed-point idf, and the fold order —
@@ -766,7 +781,7 @@ class TestBM25:
         )
 
     def test_prefilter_keeps_zero_match_candidates(self, spark, tmp_path):
-        """r10: the matched-docs prefilter must stay byte-identical to
+        """The matched-docs prefilter must stay byte-identical to
         scoring everyone in the two regimes where zero-match docs
         legitimately reach the top-20:
 
@@ -1525,3 +1540,428 @@ class TestVocabGrowthCurve:
             # vocab fraction exceeds the decile-1 token fraction only
             # if every token were unique)
             assert voc[0] <= want[s][1]
+
+
+class TestWordNgramsZipWith:
+    """word_ngrams builds grams as zip_with folds over shifted slices;
+    output must equal the definitional transform(sequence) construction
+    for every n in use and on the short-doc edge cases."""
+
+    def _reference(self, tokens, n):
+        # the definitional form: per-position element_at concat
+        def grams(ts):
+            count = F.size(ts) - (n - 1)
+
+            def gram(i):
+                parts = []
+                for j in range(n):
+                    if j:
+                        parts.append(F.lit(" "))
+                    parts.append(F.element_at(ts, i + F.lit(j)))
+                return F.concat(*parts)
+
+            return F.when(
+                count <= 0, F.array().cast("array<string>")
+            ).otherwise(
+                F.array_distinct(
+                    F.transform(F.sequence(F.lit(1), count), gram)
+                )
+            )
+
+        return F.element_at(F.transform(F.array(tokens), grams), 1)
+
+    def test_matches_definitional_form_all_n(self, spark):
+        rows = [
+            ("a b c d e f g",),
+            ("a b",),
+            ("a",),
+            ("",),
+            ("x x x x",),  # duplicates: array_distinct path
+            ("one two three four five six seven eight nine ten",),
+        ]
+        df = spark.createDataFrame(rows, "text string")
+        toks = df.select("text", tokenize(F.col("text")).alias("t"))
+        for n in (1, 2, 3, 5):
+            # keyed on the source text (unique per row), not on
+            # monotonically_increasing_id alignment of two separate plans
+            # (a planner change could silently misalign rows)
+            got = {
+                r.text: r.g
+                for r in toks.select(
+                    "text", word_ngrams(F.col("t"), n).alias("g")
+                ).collect()
+            }
+            want = {
+                r.text: r.g
+                for r in toks.select(
+                    "text", self._reference(F.col("t"), n).alias("g")
+                ).collect()
+            }
+            assert got == want, f"n={n} diverged"
+
+    def test_short_doc_returns_empty(self, spark):
+        df = spark.createDataFrame([("a b",)], "text string")
+        out = df.select(
+            word_ngrams(tokenize(F.col("text")), 3).alias("g")
+        ).head()
+        assert out.g == []
+
+
+class TestJaccardDistinct:
+    """jaccard_distinct (inclusion-exclusion union size) must bit-match
+    jaccard on duplicate-free arrays — the only inputs its call sites
+    (shingle columns) ever produce — and is allowed to diverge on
+    duplicate-bearing arrays (documented)."""
+
+    def test_matches_jaccard_on_distinct_arrays(self, spark):
+        from spark_streaming_invoice_anomaly_detection_spark.operators.dedup import (
+            jaccard,
+            jaccard_distinct,
+        )
+
+        rows = [
+            (["a", "b", "c"], ["b", "c", "d"]),
+            (["a"], ["a"]),
+            (["a"], ["b"]),
+            ([], ["a", "b"]),
+            ([], []),
+            (["x", "y", "z", "w"], ["y"]),
+        ]
+        df = spark.createDataFrame(
+            rows, "a array<string>, b array<string>"
+        )
+        mism = df.select(
+            (
+                jaccard(F.col("a"), F.col("b"))
+                != jaccard_distinct(F.col("a"), F.col("b"))
+            ).alias("d")
+        ).filter("d").count()
+        assert mism == 0
+
+
+class TestJaccardDistinctNulls:
+    """NULL-input pin: under this engine's Spark-4/ANSI
+    semantics size(NULL) is NULL, so BOTH jaccard forms return 0.0 on a
+    NULL side — parity holds. (Under legacy sizeOfNull = -1 they would
+    diverge; the docstring bans exporting the helper into such a
+    session.) This pins the actual behavior so a Spark upgrade or conf
+    change that flips size(NULL) semantics fails loudly here."""
+
+    def test_null_inputs_agree_at_zero(self, spark):
+        from spark_streaming_invoice_anomaly_detection_spark.operators.dedup import (
+            jaccard,
+            jaccard_distinct,
+        )
+
+        rows = [(None, ["a", "b"]), (["a"], None), (None, None)]
+        df = spark.createDataFrame(
+            rows, "a array<string>, b array<string>"
+        )
+        for row in df.select(
+            jaccard(F.col("a"), F.col("b")).alias("j"),
+            jaccard_distinct(F.col("a"), F.col("b")).alias("jd"),
+        ).collect():
+            assert row.j == 0.0
+            assert row.jd == 0.0
+
+
+class TestQualityScoreAlnumRewrite:
+    """quality_score's alnum-char count moved from
+    size(regexp_extract_all(c, '[A-Za-z0-9]')) — one array element PER
+    CHARACTER — to a length difference over regexp_replace. Same integer
+    by construction (single-char matches cannot overlap), same NULL
+    propagation; this pins the full score against the definitional
+    form on the edge rows."""
+
+    def _score_old(self, c):
+        from spark_streaming_invoice_anomaly_detection_spark.operators.text import (
+            stopword_hits,
+            tokenize,
+        )
+
+        tokens = tokenize(c)
+        n_tok = F.size(tokens)
+        n_chars = F.length(c)
+        n_alnum = F.size(
+            F.regexp_extract_all(c, F.lit("[A-Za-z0-9]"), F.lit(0))
+        )
+        n_stop = stopword_hits(tokens, "en")
+        len_ok = ((n_chars >= 50) & (n_chars <= 2000)).cast("double")
+        alnum_ratio = n_alnum.cast("double") / F.greatest(
+            n_chars, F.lit(1)
+        ).cast("double")
+        stop_ratio = n_stop.cast("double") / F.greatest(n_tok, F.lit(1)).cast(
+            "double"
+        )
+        mean_wordlen = n_alnum.cast("double") / F.greatest(
+            n_tok, F.lit(1)
+        ).cast("double")
+        wordlen_ok = ((mean_wordlen >= 2.0) & (mean_wordlen <= 12.0)).cast(
+            "double"
+        )
+        return (
+            len_ok * 0.25
+            + alnum_ratio * 0.25
+            + stop_ratio * 0.25
+            + wordlen_ok * 0.25
+        )
+
+    def test_matches_definitional_form(self, spark):
+        from spark_streaming_invoice_anomaly_detection_spark.operators.text import (
+            quality_score,
+        )
+
+        rows = [
+            ("the quick brown fox 123",),
+            ("",),
+            (None,),
+            ("   ",),
+            ("日本語テキスト no ascii here 漢字",),
+            ("a" * 3000,),
+            ("!!! ### ...",),
+            ("the and of to in is that it for was " * 10,),
+        ]
+        df = spark.createDataFrame(rows, "text string")
+        got = df.select(
+            "text",
+            quality_score(F.col("text")).alias("a"),
+            self._score_old(F.col("text")).alias("b"),
+        ).collect()
+        for r in got:
+            assert r.a == r.b, r.text
+
+    def test_matches_on_real_corpus(self, spark, sf_dir):
+        from spark_streaming_invoice_anomaly_detection_spark.operators.text import (
+            quality_score,
+        )
+
+        docs = catalog.load_table(spark, "documents", sf_dir)
+        mism = (
+            docs.select(
+                (
+                    quality_score(F.col("text"))
+                    != self._score_old(F.col("text"))
+                ).alias("d")
+            )
+            .filter("d")
+            .count()
+        )
+        assert mism == 0
+
+
+class TestGopherFlags:
+    def test_prose_passes_all_rules(self, spark):
+        text = (
+            "the quick brown fox jumps over the lazy dog and then runs to "
+            "the river of light with a friend that may have seen it before"
+        )
+        df = spark.createDataFrame([(text,)], "text string")
+        row = df.select(
+            *[c.alias(n) for n, c in X.gopher_flags(F.col("text")).items()]
+        ).first()
+        assert row.keep is True
+        assert row.word_count_ok and row.wordlen_ok
+        assert row.symbol_ok and row.alpha_ok and row.stopword_ok
+
+    def test_symbol_soup_fails(self, spark):
+        text = "### ### ... ### " * 10
+        df = spark.createDataFrame([(text,)], "text string")
+        row = df.select(
+            *[c.alias(n) for n, c in X.gopher_flags(F.col("text")).items()]
+        ).first()
+        assert row.keep is False
+        assert row.symbol_ok is False  # symbols dominate
+        assert row.alpha_ok is False  # no alphabetic words
+
+    def test_short_doc_fails_word_count(self, spark):
+        df = spark.createDataFrame([("too short",)], "text string")
+        row = df.select(
+            *[c.alias(n) for n, c in X.gopher_flags(F.col("text")).items()]
+        ).first()
+        assert row.n_words == 2
+        assert row.word_count_ok is False and row.keep is False
+
+
+class TestSequencePacking:
+    def test_token_conservation_and_contiguity(self, spark, sf_dir):
+        bins = q_sequence_packing(spark, sf_dir).orderBy("bin").collect()
+        total_packed = sum(r.n_tokens for r in bins)
+        from spark_streaming_invoice_anomaly_detection_spark.sources.catalog import (
+            load_table,
+        )
+
+        total_tokens = (
+            load_table(spark, "documents", sf_dir)
+            .select(
+                F.sum(
+                    X.bpe_token_estimate(F.col("text")).cast("long")
+                ).alias("t")
+            )
+            .first()
+            .t
+        )
+        assert total_packed == total_tokens  # packing loses nothing
+        # bins are contiguous id ranges: each bin's first_doc follows the
+        # previous bin's last_doc (greedy packing never reorders)
+        for prev, cur in zip(bins, bins[1:]):
+            assert prev.last_doc <= cur.first_doc
+        # every bin except possibly the last starts within budget of the
+        # global offset grid: n_docs >= 1 and bin ids are dense
+        assert [r.bin for r in bins] == list(range(len(bins)))
+
+
+class TestChunkDedup:
+    def test_planted_copies_fully_duplicated(self, spark, sf_dir):
+        rows = q_chunk_dedup(spark, sf_dir).collect()
+        by_id = {r.doc_id: r for r in rows}
+        # every original doc's chunks are duplicated by its verbatim copy
+        originals = [r for r in rows if r.doc_id < 1_000_000]
+        assert originals
+        for r in originals:
+            assert r.dup_chunk_frac == pytest.approx(1.0)
+            assert by_id[r.doc_id + 1_000_000].n_chunks == r.n_chunks
+
+
+class TestDecontamination:
+    def test_planted_eval_docs_detected(self, spark, sf_dir):
+        rows = q_decontamination(spark, sf_dir).collect()
+        # each eval doc is a truncation of its source: the source must be
+        # flagged with high overlap
+        hits = {(r.doc_id, r.eval_id): r.overlap_frac for r in rows}
+        assert hits, "no contamination detected for planted eval set"
+        for (doc_id, eval_id), frac in hits.items():
+            if eval_id == doc_id + 1_000_000:
+                # truncation cuts mid-word: the partial first token makes
+                # the eval copy's leading grams novel, so overlap < 1.0
+                assert frac > 0.7
+        assert any(e == d + 1_000_000 for d, e in hits)
+
+
+class TestEmbeddingQuantize:
+    def test_error_bounded_by_half_scale_per_dim(self, spark, sf_dir):
+        rows = q_embedding_quantize(spark, sf_dir).collect()
+        for r in rows:
+            # |x - q*scale| <= scale/2 per dim (round-to-nearest)
+            assert r.recon_err <= r.n_dims * (r.scale / 2.0) ** 2 + 1e-12
+            assert r.scale > 0
+
+
+class TestPageRank:
+    def test_mass_approximately_conserved(self, spark, sf_dir):
+        rows = q_pagerank_neardup(spark, sf_dir).collect()
+        n = len(rows)
+        total = sum(r.rank_scaled for r in rows)
+        # dangling nodes leak damping mass; floor-division truncates. Total
+        # stays in (teleport-only lower bound, full mass upper bound].
+        assert total <= _PR_SCALE
+        assert total >= (15 * _PR_SCALE) // 100 - n * _PR_ITERS
+        assert all(r.rank_scaled >= (15 * _PR_SCALE) // (100 * n) for r in rows)
+        # near-dup partners (planted copies) must out-rank isolated docs
+        ranked = {r.doc_id: r.rank_scaled for r in rows}
+        linked = [v for k, v in ranked.items() if k >= 1_000_000]
+        assert max(linked) > min(ranked.values())
+
+
+class TestApproxQuantiles:
+    def test_within_rank_error_of_exact(self, spark, sf_dir):
+        from spark_streaming_invoice_anomaly_detection_spark.plans.relational import (
+            q_approx_quantiles,
+        )
+        from spark_streaming_invoice_anomaly_detection_spark.sources.catalog import (
+            load_table,
+        )
+
+        approx = {
+            r.event_type: (r.q25_approx, r.q50_approx, r.q75_approx)
+            for r in q_approx_quantiles(spark, sf_dir).collect()
+        }
+        ev = load_table(spark, "events", sf_dir)
+        exact = {
+            r.event_type: r.q
+            for r in ev.groupBy("event_type")
+            .agg(F.expr("percentile(value, array(0.25, 0.5, 0.75))").alias("q"))
+            .collect()
+        }
+        for etype, qs in approx.items():
+            for a, e in zip(qs, exact[etype]):
+                # GK accuracy 10k on these group sizes is near-exact; allow
+                # a loose 5% envelope to keep the pin robust across SFs
+                assert a == pytest.approx(e, rel=0.05, abs=1.0)
+
+
+class TestLabelSpectrum:
+    def test_matches_local_numpy(self, spark, sf_dir):
+        import numpy as np
+
+        from spark_streaming_invoice_anomaly_detection_spark.operators.vectors import (
+            label_top_eigenvalue,
+        )
+        from spark_streaming_invoice_anomaly_detection_spark.sources.catalog import (
+            load_table,
+        )
+
+        emb = load_table(spark, "embeddings", sf_dir)
+        got = {r.label: r for r in label_top_eigenvalue(emb).collect()}
+        rows = emb.collect()
+        by_label: dict[int, list] = {}
+        for r in rows:
+            by_label.setdefault(r.label, []).append(
+                np.asarray(r.embedding, dtype=np.float64)
+            )
+        for label, vecs in by_label.items():
+            mat = np.array(vecs)
+            centered = mat - mat.mean(axis=0, keepdims=True)
+            cov = (centered.T @ centered) / max(len(mat) - 1, 1)
+            eig = np.linalg.eigvalsh(cov)
+            r = got[label]
+            assert r.n_vectors == len(vecs)
+            assert r.top_eigenvalue == pytest.approx(float(eig[-1]), rel=1e-9)
+            assert 0.0 < r.explained_share <= 1.0
+
+
+class TestObservedMetrics:
+    def test_metrics_computed_inline(self, spark, sf_dir):
+        import pyspark.sql.functions as FF
+
+        from spark_streaming_invoice_anomaly_detection_spark.sources.catalog import (
+            load_table,
+        )
+        from spark_streaming_invoice_anomaly_detection_spark.streaming.monitor import (
+            observed,
+        )
+
+        li = load_table(spark, "lineitem", sf_dir)
+        df, obs = observed(
+            li.filter(FF.col("l_quantity") > 25),
+            "filtered",
+            FF.count(FF.lit(1)).alias("rows_out"),
+            FF.sum("l_quantity").alias("qty_out"),
+        )
+        n = df.count()
+        assert obs.get["rows_out"] == n
+        assert obs.get["qty_out"] > 25 * max(n - 1, 1)
+
+
+class TestArrowTextStatsUnicode:
+    def test_codepoint_semantics_on_non_ascii(self, spark):
+        """n_chars_utf8 counts CODEPOINTS (pc.utf8_length), and the DuckDB
+        oracle uses length() (also codepoints) — pinned here on non-ASCII
+        input so a future ASCII-only testdata regeneration can't hide a
+        bytes-vs-codepoints regression."""
+        import duckdb
+
+        from spark_streaming_invoice_anomaly_detection_spark.operators.arrowops import (
+            text_stats_arrow,
+        )
+
+        texts = ["héllo wörld", "日本語 テスト", "emoji 🎉 text", "plain"]
+        df = spark.createDataFrame(
+            [(i, t, "s") for i, t in enumerate(texts)],
+            "doc_id long, text string, source string",
+        )
+        got = {r.doc_id: r.n_chars_utf8 for r in text_stats_arrow(df).collect()}
+        want_py = {i: len(t) for i, t in enumerate(texts)}
+        assert got == want_py
+        con = duckdb.connect()
+        for i, t in enumerate(texts):
+            assert con.execute("SELECT length(?)", [t]).fetchone()[0] == want_py[i]

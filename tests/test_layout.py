@@ -1,98 +1,15 @@
-"""Data-layout operators (operators/layout.py): partition pruning,
-shuffle-free bucketed joins, and salted skew joins — correctness AND the
-plan shapes that make them worth having at 100 TB."""
+"""Layout helpers (operators/layout.py): salted skew joins, the runtime
+Bloom-filter join shape, and the keyed narrow-scan spread — correctness
+AND the plan shapes that make them worth having."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-
-import pytest
 from pyspark.sql import functions as F
 
 from spark_streaming_invoice_anomaly_detection_spark.operators import layout
+from spark_streaming_invoice_anomaly_detection_spark.operators.layout import cluster_if_narrow
+from spark_streaming_invoice_anomaly_detection_spark.sources import catalog
 from spark_streaming_invoice_anomaly_detection_spark.sources.catalog import load_table
-
-
-def plan_of(df, mode: str = "formatted") -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode)
-    return buf.getvalue()
-
-
-class TestPartitionedWrite:
-    def test_partition_pruning(self, spark, sf_dir, tmp_path):
-        orders = load_table(spark, "orders", sf_dir)
-        path = str(tmp_path / "orders_by_status")
-        layout.write_partitioned(orders, path, ["o_orderstatus"])
-
-        back = spark.read.parquet(path)
-        pruned = back.filter(F.col("o_orderstatus") == "F")
-        plan = plan_of(pruned)
-        pf = plan.split("PartitionFilters")[1].split("\n")[0]
-        assert "o_orderstatus" in pf  # predicate prunes at listing time
-        # values survive the round trip exactly
-        want = orders.filter(F.col("o_orderstatus") == "F").count()
-        assert pruned.count() == want
-
-
-class TestBucketedJoin:
-    def test_bucketed_join_has_no_exchange(self, spark, sf_dir, tmp_path):
-        li = load_table(spark, "lineitem", sf_dir).select(
-            "l_orderkey", "l_quantity"
-        )
-        o = load_table(spark, "orders", sf_dir).select(
-            "o_orderkey", "o_totalprice"
-        )
-        layout.write_bucketed(
-            li, "t_li_bkt", "l_orderkey", 8, path=str(tmp_path / "li")
-        )
-        layout.write_bucketed(
-            o.withColumnRenamed("o_orderkey", "l_orderkey"),
-            "t_o_bkt", "l_orderkey", 8, path=str(tmp_path / "o"),
-        )
-        try:
-            a = layout.read_table(spark, "t_li_bkt")
-            b = layout.read_table(spark, "t_o_bkt")
-            with _no_broadcast(spark):
-                joined = a.join(b, "l_orderkey")
-                plan = plan_of(joined)
-                # both sides pre-bucketed on the key: the join runs with
-                # ZERO shuffle — the property that pays at 100 TB
-                assert "Exchange hashpartitioning" not in plan
-                assert "SortMergeJoin" in plan
-                assert joined.count() == li.join(o, li.l_orderkey == o.o_orderkey).count()
-        finally:
-            spark.sql("DROP TABLE IF EXISTS t_li_bkt")
-            spark.sql("DROP TABLE IF EXISTS t_o_bkt")
-
-    def test_bucketed_agg_has_no_exchange(self, spark, sf_dir, tmp_path):
-        li = load_table(spark, "lineitem", sf_dir).select(
-            "l_orderkey", "l_quantity"
-        )
-        layout.write_bucketed(
-            li, "t_li_agg_bkt", "l_orderkey", 8, path=str(tmp_path / "li2")
-        )
-        try:
-            agg = (
-                layout.read_table(spark, "t_li_agg_bkt")
-                .groupBy("l_orderkey")
-                .agg(F.sum("l_quantity").alias("q"))
-            )
-            assert "Exchange hashpartitioning" not in plan_of(agg)
-        finally:
-            spark.sql("DROP TABLE IF EXISTS t_li_agg_bkt")
-
-
-@contextlib.contextmanager
-def _no_broadcast(spark):
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 class TestSaltedJoin:
@@ -182,197 +99,38 @@ class TestRuntimeBloomFilter:
         assert got == baseline
 
 
-class TestZOrder:
-    def test_two_dimensional_file_skipping(self, spark, sf_dir, tmp_path):
-        """Z-order layout clusters BOTH columns at once: a 10%-range
-        predicate on either dimension touches a minority of files (via
-        parquet min/max stats), where a single-column sort only localizes
-        the sorted column."""
-        from spark_streaming_invoice_anomaly_detection_spark.operators.layout import (
-            write_zordered,
+class TestClusterIfNarrow:
+    def test_narrow_scan_gets_keyed_repartition(self, spark, sf_dir):
+        li = catalog.load_table(spark, "lineitem", sf_dir)
+        out = cluster_if_narrow(li, "l_orderkey")
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "RepartitionByExpression" in plan.replace(
+            "repartitionbyexpression", "RepartitionByExpression"
+        ) or "l_orderkey" in plan
+
+    def test_agg_behind_single_exchange(self, spark, sf_dir):
+        """The keyed spread must satisfy the groupBy's distribution: one
+        hash exchange total, not two."""
+        li = catalog.load_table(spark, "lineitem", sf_dir)
+        df = cluster_if_narrow(li, "l_orderkey").groupBy("l_orderkey").agg(
+            F.count(F.lit(1)).alias("c")
         )
-        from spark_streaming_invoice_anomaly_detection_spark.sources.catalog import (
-            load_table,
-        )
+        phys = df._jdf.queryExecution().executedPlan().toString()
+        assert phys.count("Exchange hashpartitioning") == 1
 
-        li = load_table(spark, "lineitem", sf_dir).select(
-            "l_partkey", "l_suppkey", "l_quantity"
-        )
-        path = str(tmp_path / "zordered")
-        # 64 files -> each dimension contributes 3 of the top 6 Morton
-        # bits, so a thin slice on either column confines to ~1/4 of files
-        write_zordered(li, path, "l_partkey", "l_suppkey", bits=8, num_files=64)
-
-        import glob
-
-        files = sorted(glob.glob(f"{path}/part-*.parquet"))
-        assert len(files) > 16, "need enough files for skipping to mean anything"
-
-        def files_touched(col: str) -> int:
-            stats = [
-                spark.read.parquet(f)
-                .agg(F.min(col).alias("lo"), F.max(col).alias("hi"))
-                .first()
-                for f in files
-            ]
-            full = li.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).first()
-            width = (full.hi - full.lo) or 1
-            # off-center 8% slice (a midpoint-straddling slice crosses the
-            # top-bit boundary and doubles the touched set — worst case)
-            q_lo = full.lo + width * 0.20
-            q_hi = full.lo + width * 0.28
-            return sum(1 for s in stats if s.lo <= q_hi and s.hi >= q_lo)
-
-        n = len(files)
-        touched_a = files_touched("l_partkey")
-        touched_b = files_touched("l_suppkey")
-        # both dimensions skip simultaneously — the single-column-sort
-        # counterexample would touch ~all files on its unsorted column
-        assert touched_a <= n * 0.5, (touched_a, n)
-        assert touched_b <= n * 0.5, (touched_b, n)
-
-
-class TestCatalogStats:
-    def test_analyze_feeds_cbo_row_and_column_stats(self, spark, sf_dir, tmp_path):
-        """ANALYZE round-trip: rowCount and per-column NDV/min/max land in
-        the catalog — the CBO's join-reorder/broadcast inputs."""
-        from spark_streaming_invoice_anomaly_detection_spark.operators import layout
-        from spark_streaming_invoice_anomaly_detection_spark.sources.catalog import (
-            load_table,
-        )
-
-        nation = load_table(spark, "nation", sf_dir)
-        n_rows = nation.count()
-        try:
-            nation.write.mode("overwrite").option(
-                "path", str(tmp_path / "nation_tbl")
-            ).saveAsTable("t_nation_stats")
-            assert layout.table_stats(spark, "t_nation_stats")["row_count"] is None
-            layout.analyze_table(
-                spark, "t_nation_stats", columns=["n_nationkey", "n_regionkey"]
-            )
-            stats = layout.table_stats(spark, "t_nation_stats")
-            assert stats["row_count"] == n_rows
-            assert stats["size_bytes"] > 0
-            cstats = layout.column_stats(spark, "t_nation_stats", "n_nationkey")
-            assert cstats["distinct_count"] == str(n_rows)  # key column: NDV = rows
-            assert cstats["num_nulls"] == "0"
-            assert cstats["min"] == "0"
-        finally:
-            spark.sql("DROP TABLE IF EXISTS t_nation_stats")
-
-
-class TestCompaction:
-    def test_compact_collapses_small_files_preserving_rows(
-        self, spark, sf_dir, tmp_path
-    ):
-        from spark_streaming_invoice_anomaly_detection_spark.operators import layout
-        from spark_streaming_invoice_anomaly_detection_spark.sources.catalog import (
-            load_table,
-        )
-
-        li = load_table(spark, "lineitem", sf_dir)
-        src = str(tmp_path / "fragmented")
-        li.repartition(40).write.parquet(src)  # simulate micro-batch litter
-        assert len(spark.read.parquet(src).inputFiles()) == 40
-
-        dst = str(tmp_path / "compacted")
-        n = layout.compact_parquet(spark, src, dst, target_mb=128)
-        assert n == 1  # sf0.001 lineitem is far below one 128 MB target
-        assert len(spark.read.parquet(dst).inputFiles()) == 1
-        assert spark.read.parquet(dst).count() == li.count()
-
-    def test_compact_cluster_by_gives_disjoint_file_ranges(
-        self, spark, sf_dir, tmp_path
-    ):
-        """cluster_by range-partitions the rewrite: each output file holds
-        a disjoint key range, so parquet min/max stats prune files."""
-        from pyspark.sql import functions as F
-
-        from spark_streaming_invoice_anomaly_detection_spark.operators import layout
-        from spark_streaming_invoice_anomaly_detection_spark.sources.catalog import (
-            load_table,
-        )
-
-        ev = load_table(spark, "events", sf_dir)
-        src = str(tmp_path / "ev_frag")
-        ev.repartition(16).write.parquet(src)
-        dst = str(tmp_path / "ev_clustered")
-        # tiny target forces multiple output files even at fixture scale
-        layout.compact_parquet(spark, src, dst, target_mb=1, cluster_by=["user_id"])
-        out = spark.read.parquet(dst)
-        per_file = (
-            out.withColumn("f", F.input_file_name())
-            .groupBy("f")
-            .agg(F.min("user_id").alias("lo"), F.max("user_id").alias("hi"))
+    def test_values_identical_to_plain_agg(self, spark, sf_dir):
+        li = catalog.load_table(spark, "lineitem", sf_dir)
+        plain = (
+            li.groupBy("l_orderkey")
+            .agg(F.sum("l_quantity").alias("s"), F.count(F.lit(1)).alias("c"))
+            .orderBy("l_orderkey")
             .collect()
         )
-        assert out.count() == ev.count()
-        if len(per_file) > 1:
-            spans = sorted((r.lo, r.hi) for r in per_file)
-            for (_, hi_prev), (lo_next, _) in zip(spans, spans[1:]):
-                assert hi_prev <= lo_next  # disjoint (boundary keys may tie)
-
-
-class TestSchemaEvolution:
-    def test_merged_schema_read_unions_columns(self, spark, tmp_path):
-        import pandas as pd
-
-        from spark_streaming_invoice_anomaly_detection_spark.sources.formats import (
-            read_merged_schema,
+        spread = (
+            cluster_if_narrow(li, "l_orderkey")
+            .groupBy("l_orderkey")
+            .agg(F.sum("l_quantity").alias("s"), F.count(F.lit(1)).alias("c"))
+            .orderBy("l_orderkey")
+            .collect()
         )
-
-        d = str(tmp_path / "evolving")
-        v1 = spark.createDataFrame(pd.DataFrame({"id": [1, 2], "a": ["x", "y"]}))
-        v2 = spark.createDataFrame(
-            pd.DataFrame({"id": [3], "a": ["z"], "b_added_later": [9]})
-        )
-        v1.write.parquet(d)
-        v2.write.mode("append").parquet(d)
-        df = read_merged_schema(spark, d)
-        assert set(df.columns) == {"id", "a", "b_added_later"}
-        rows = {r.id: r for r in df.collect()}
-        assert rows[1].b_added_later is None  # pre-evolution file -> null
-        assert rows[3].b_added_later == 9
-
-
-class TestIdempotentBackfill:
-    def test_overwrites_only_touched_partitions(self, spark, tmp_path):
-        from spark_streaming_invoice_anomaly_detection_spark.operators.layout import (
-            idempotent_backfill,
-        )
-
-        path = str(tmp_path / "t")
-        full = spark.createDataFrame(
-            [("2024-01-01", 1, 10.0), ("2024-01-01", 2, 20.0),
-             ("2024-01-02", 3, 30.0)],
-            "day string, id int, v double",
-        )
-        idempotent_backfill(full, path, ["day"])
-        assert spark.read.parquet(path).count() == 3
-
-        # re-run day 1 with corrected data: day 2 must survive
-        fix = spark.createDataFrame(
-            [("2024-01-01", 1, 11.0)], "day string, id int, v double"
-        )
-        idempotent_backfill(fix, path, ["day"])
-        # partition values read back type-inferred (string -> date)
-        got = {
-            (str(r.day), r.id): r.v
-            for r in spark.read.parquet(path).collect()
-        }
-        assert got == {("2024-01-01", 1): 11.0, ("2024-01-02", 3): 30.0}
-
-    def test_rerun_same_batch_is_idempotent(self, spark, tmp_path):
-        from spark_streaming_invoice_anomaly_detection_spark.operators.layout import (
-            idempotent_backfill,
-        )
-
-        path = str(tmp_path / "t2")
-        batch = spark.createDataFrame(
-            [("2024-02-01", i, float(i)) for i in range(5)],
-            "day string, id int, v double",
-        )
-        idempotent_backfill(batch, path, ["day"])
-        idempotent_backfill(batch, path, ["day"])
-        assert spark.read.parquet(path).count() == 5
+        assert plain == spread

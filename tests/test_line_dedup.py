@@ -1,4 +1,4 @@
-"""Semantic pins for repeated-line boilerplate dedup (r11, CCNet
+"""Semantic pins for repeated-line boilerplate dedup (CCNet
 arXiv:1911.00359 / RefinedWeb arXiv:2306.01116): the token_lines
 decomposition contract, the census arithmetic, and the planted
 header/footer carrier counts the DuckDB hash oracle proves equal but

@@ -1,6 +1,6 @@
-"""Static NameError gate for every registered query (r8 postmortem).
+"""Static NameError gate for every registered query.
 
-Round 8 registered lsh_capped_bucket_audit referencing an undefined
+lsh_capped_bucket_audit was once registered referencing an undefined
 name ``T`` and never executed it — the plan-hygiene test would have
 caught it, but only when someone RUNS the suite (it needs a Spark
 session and minutes of wall clock). This gate needs neither: a

@@ -1,11 +1,11 @@
-"""Registry-wide oracle output-type parity scan (round-5 VERDICT #2).
+"""Registry-wide oracle output-type parity scan.
 
 The driver hashes pandas *representations*, so an oracle whose output
 column is a DuckDB type pandas renders differently from Spark's —
 HUGEINT (int128 -> float64 `83.0` vs Spark int64 `83`) or DECIMAL
 (-> decimal.Decimal objects vs Spark float64) — hash-fails even when
 every value is numerically identical.  That is exactly how
-``token_budget_sample`` burned a driver slot in round 5 despite a green
+``token_budget_sample`` once hash-failed despite a green
 local suite: the local harness compared *values*, not dtypes.
 
 This module makes the class structurally impossible:
@@ -73,7 +73,7 @@ def test_no_oracle_emits_hugeint_or_decimal(con, name):
 
 def test_scan_catches_known_bad_types(con):
     """The checker must flag both real-world instances of the class:
-    round-5's ``token_budget_sample`` (windowed SUM(BIGINT) -> HUGEINT)
+    ``token_budget_sample`` (windowed SUM(BIGINT) -> HUGEINT)
     and the latent ``benford_first_digit`` (float-literal list ->
     DECIMAL(18,17)) — reproduced here as minimal probes."""
     hugeint = con.sql(

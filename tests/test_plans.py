@@ -145,7 +145,7 @@ class TestRound2Shapes:
         assert "BroadcastNestedLoopJoin" not in plan
 
     def test_cpu_heavy_stages_pin_their_width(self, spark, sf_dir, q):
-        """Round-6 fix class: stages whose cost is per-GROUP Python
+        """Fix class: stages whose cost is per-GROUP Python
         dispatch or per-PAIR folds must carry a user repartition
         (REPARTITION_BY_NUM — AQE-exempt), because AQE's byte-based
         coalescing serialized them (cogroup 23.5 s -> 3.0 s at sf0.1,
@@ -210,7 +210,7 @@ class TestAQESkewJoin:
 
 
 class TestTpchShapePlans:
-    """Round-2 TPC-H shapes: the plan properties that survive a 100x."""
+    """TPC-H shapes: the plan properties that survive a 100x."""
 
     def test_q17_single_lineitem_scan(self, spark, sf_dir, q):
         """The decorrelated threshold must come from a window over the
@@ -250,7 +250,7 @@ class TestTpchShapePlans:
         assert "hashpartitioning(term" in plan
 
     def test_cogroup_shuffles_each_side_once(self, spark, sf_dir, q):
-        """FlatMapCoGroupsInArrow (r12: Arrow batches, not pandas blocks,
+        """FlatMapCoGroupsInArrow (Arrow batches, not pandas blocks,
         cross the Python boundary): one exchange per input, no join node."""
         plan = plan_of(q["cogroup_event_attribution"](spark, sf_dir), "simple")
         assert "FlatMapCoGroupsInArrow" in plan
@@ -279,7 +279,7 @@ class TestPythonBoundaryPlans:
 
 
 # ---------------------------------------------------------------------------
-# Registry-wide physical-plan hygiene (r3 audit, pinned)
+# Registry-wide physical-plan hygiene
 # ---------------------------------------------------------------------------
 
 
@@ -309,7 +309,7 @@ def test_registry_plan_hygiene(spark, sf_dir):
     # gate (2), plus one bucket-stats agg and one 16-group census — each
     # keyed on int64 ids or 60-bit bucket hashes, nothing quadratic.
     shuffle_allow.add("dedup_recall_matrix")
-    # the r11 five-stage cleaning funnel composes four oracled families
+    # the five-stage cleaning funnel composes four oracled families
     # in sequence (8 exchanges, itemized): pre-dedup head census (1),
     # content-hash dedup window (1), per-line doc-count agg (1) + the
     # line_hash join back (2), per-doc rollup (1), post-dedup tail

@@ -251,7 +251,7 @@ class TestGKDecileExactRegime:
         # Bind values as parameters: DuckDB binds Python floats as DOUBLE
         # directly. Interpolating float reprs as SQL literals is WRONG —
         # a 17-significant-digit decimal literal is typed DECIMAL and the
-        # DOUBLE cast can land 1 ulp off (round-4 VERDICT finding #1).
+        # DOUBLE cast can land 1 ulp off.
         decile_sql = ", ".join(
             f"quantile_disc(v, {d!r})" for d in _CAL_DECILES
         )
@@ -266,16 +266,15 @@ class TestGKDecileExactRegime:
 
 
 class TestGKExactRegimeBoundary:
-    """Adversarial licensing tests for every percentile_approx oracle
-    (round-3 VERDICT #7): the hash oracles are licensed by the GK
-    sketch's EXACT regime (per-group/frame rows <= accuracy). These
-    generative tests prove (a) inside the regime the sketch equals
-    DuckDB's quantile_disc on arbitrary generated data, (b) past the
-    regime it really does deviate — the bound is load-bearing, not
-    folklore — and (c) the driver's actual scale factors sit inside the
-    regime with headroom, so parity cannot silently break at a SF bump
-    (the failure mode round-3 ADVICE warned about for rolling_median_7d
-    and friends)."""
+    """Adversarial licensing tests for every percentile_approx oracle:
+    the hash oracles are licensed by the GK sketch's EXACT regime
+    (per-group/frame rows <= accuracy). These generative tests prove
+    (a) inside the regime the sketch equals DuckDB's quantile_disc on
+    arbitrary generated data, (b) past the regime it really does
+    deviate — the bound is load-bearing, not folklore — and (c) the
+    driver's actual scale factors sit inside the regime with headroom,
+    so parity cannot silently break at a SF bump (the failure mode that
+    threatens rolling_median_7d and friends)."""
 
     @settings(max_examples=15, deadline=None)
     @given(
@@ -314,7 +313,7 @@ class TestGKExactRegimeBoundary:
         # Parameter-bound, NOT interpolated literals: DuckDB types a
         # 17-significant-digit VALUES literal as DECIMAL and its DOUBLE
         # cast can be 1 ulp off the exact double Spark received (the
-        # round-4 red test: vals=[1.9999999998835847]). Binding the list
+        # red test: vals=[1.9999999998835847]). Binding the list
         # hands DuckDB the bit-exact doubles.
         want = list(
             duckdb.connect()
@@ -503,7 +502,7 @@ class TestAdaptiveBucketModulus:
 
 
 class TestFixedPointOverflowHorizons:
-    """r10 VERDICT #7: every fixed-point query documents its int64
+    """Every fixed-point query documents its int64
     overflow horizon; this pins the SHARED structural claim the notes
     rely on — an fp_log2 factor is < 256*64, so products with per-doc
     counts stay in int64 far past any physical document, while naive

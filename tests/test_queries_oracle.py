@@ -17,7 +17,7 @@ ORACLE_NAMES = [n for n, s in REGISTRY.items() if s.oracle is not None]
 
 # Queries whose correct result CAN be empty at small SF. Everything else
 # must return rows — an empty result matching an empty oracle is a vacuous
-# pass (r2 ADVICE: three queries validated nothing through dead filters).
+# pass (three queries once validated nothing through dead filters).
 EMPTY_OK = {"join_anti", "nation_volume_shipping"}
 
 

@@ -55,7 +55,7 @@ def test_fp_log2_rejects_nonpositive():
 
 
 def test_eval_split_prefilter_matches_plain_window_both_branches(spark):
-    """r9 VERDICT #5: the GK-prefiltered two-phase plan must be
+    """The GK-prefiltered two-phase plan must be
     byte-identical to the plain single-window plan. Checked against an
     independent PYTHON twin (same h60 salt, same Hamilton quotas) on a
     skewed synthetic corpus, under three prefilter settings:
@@ -156,7 +156,7 @@ def test_eval_split_prefilter_matches_plain_window_both_branches(spark):
 def test_repetition_census_prefilter_matches_plain_window_both_branches(
     spark,
 ):
-    """r10 VERDICT #5: the histogram-prefiltered greedy-prefix census
+    """The histogram-prefiltered greedy-prefix census
     must be byte-identical to the plain single-window plan. Checked
     against an independent PYTHON twin (same h60 salt, same
     (rank_key, doc_id) ordering, same running-char-sum cut) on a skewed

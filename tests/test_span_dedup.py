@@ -1,4 +1,4 @@
-"""Semantic pins for span-level exact-substring dedup (r11, Lee et al.
+"""Semantic pins for span-level exact-substring dedup (Lee et al.
 2022 arXiv:2107.06499): the content-anchoring invariant (sampled spans
 depend only on local content, never on position), the census arithmetic,
 and the recall-matrix modality story the DuckDB hash oracle proves equal
@@ -113,7 +113,7 @@ def test_top_repeated_spans_is_boilerplate_report(spark, sf_dir):
 
 
 def test_recall_matrix_span_modality_story(spark, sf_dir):
-    """The r11 row/column: mid_spliced is caught ONLY by substring_span
+    """The mid_spliced row and substring_span column: mid_spliced is caught ONLY by substring_span
     (all four doc-level detectors at exactly 0), and substring_span also
     sees verbatim/truncation/head-drop plants at high recall while
     staying 0 on reorderings (no verbatim window survives a reversal)."""

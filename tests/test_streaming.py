@@ -1,5 +1,6 @@
 """Streaming-path tests: parse taxonomy, sessionization semantics (T2),
-validation cascade (P10), sliding window (T4), full pipeline fan-out.
+validation cascade (P10), sliding window (T4), full pipeline fan-out,
+watermarked windows, session windows and stream-static joins.
 
 File source + memory/collecting sinks replace Kafka (same DataFrame
 contract); expiry counts micro-batches (ticks) as the reference's
@@ -446,3 +447,167 @@ def test_pipeline_sink_failure_releases_batch_caches(spark, tmp_path):
     finally:
         q.stop()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.slow
+def test_watermark_drops_late_rows(spark, tmp_path):
+    """T6 opt-in event time: append-mode windows finalize when the
+    watermark passes window end, and rows arriving behind the watermark
+    are dropped — the count of a closed window never changes."""
+    import os
+    import time
+
+    from spark_streaming_invoice_anomaly_detection_spark.streaming.windows import (
+        sliding_count,
+    )
+
+    src = tmp_path / "in"
+    os.makedirs(src, exist_ok=True)
+    raw = (
+        spark.readStream.schema("ts timestamp")
+        .option("maxFilesPerTrigger", "1")
+        .json(str(src))
+    )
+    counts = sliding_count(
+        raw, "ts", window="10 seconds", slide="10 seconds", watermark="5 seconds"
+    )
+    q = (
+        counts.writeStream.format("memory")
+        .queryName("wm_out")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .outputMode("append")
+        .trigger(processingTime="1 seconds")
+        .start()
+    )
+
+    def rows():
+        return {
+            (r.window_start.isoformat(), r.n)
+            for r in spark.sql("SELECT * FROM wm_out").collect()
+        }
+
+    try:
+        # window [10:00:00,10:00:10): two on-time rows
+        (src / "b0.json").write_text(
+            '{"ts": "2024-01-01T10:00:01"}\n{"ts": "2024-01-01T10:00:02"}\n'
+        )
+        time.sleep(3)
+        # advance event time far past the window -> watermark closes it
+        (src / "b1.json").write_text('{"ts": "2024-01-01T10:30:00"}\n')
+        deadline = time.time() + 90
+        while time.time() < deadline and not any(
+            s.startswith("2024-01-01T10:00:00") for s, _ in rows()
+        ):
+            time.sleep(1)
+        closed = {s: n for s, n in rows() if s.startswith("2024-01-01T10:00:00")}
+        assert closed.get("2024-01-01T10:00:00") == 2, rows()
+
+        # a LATE row for the closed window: behind the watermark -> dropped
+        (src / "b2.json").write_text('{"ts": "2024-01-01T10:00:03"}\n')
+        time.sleep(4)
+        # push watermark further so anything pending would have flushed
+        (src / "b3.json").write_text('{"ts": "2024-01-01T11:00:00"}\n')
+        time.sleep(4)
+        after = {s: n for s, n in rows() if s.startswith("2024-01-01T10:00:00")}
+        assert after == {"2024-01-01T10:00:00": 2}, "late row resurrected a closed window"
+    finally:
+        q.stop()
+
+
+@pytest.mark.slow
+def test_builtin_session_window_streaming(spark, tmp_path):
+    """Built-in gap-based session windows (session_window) in a stream:
+    events within the gap merge into one session per user; watermark
+    finalizes sessions in append mode."""
+    import os
+    import time
+
+    from pyspark.sql import functions as F
+
+    src = tmp_path / "in"
+    os.makedirs(src, exist_ok=True)
+    raw = (
+        spark.readStream.schema("user_id long, ts timestamp")
+        .option("maxFilesPerTrigger", "1")
+        .json(str(src))
+    )
+    sessions = (
+        raw.withWatermark("ts", "5 seconds")
+        .groupBy(
+            F.session_window(F.col("ts"), "10 seconds").alias("w"),
+            F.col("user_id"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select("user_id", "n_events", F.col("w.start").alias("start"))
+    )
+    q = (
+        sessions.writeStream.format("memory")
+        .queryName("sess_out")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .outputMode("append")
+        .trigger(processingTime="1 seconds")
+        .start()
+    )
+    try:
+        # user 1: two events 3s apart (one session); user 2: one event
+        (src / "b0.json").write_text(
+            '{"user_id": 1, "ts": "2024-01-01T10:00:00"}\n'
+            '{"user_id": 1, "ts": "2024-01-01T10:00:03"}\n'
+            '{"user_id": 2, "ts": "2024-01-01T10:00:01"}\n'
+        )
+        time.sleep(3)
+        # advance watermark past the sessions to finalize them
+        (src / "b1.json").write_text('{"user_id": 9, "ts": "2024-01-01T10:30:00"}\n')
+        deadline = time.time() + 90
+        rows = []
+        while time.time() < deadline:
+            rows = spark.sql("SELECT * FROM sess_out").collect()
+            if len(rows) >= 2:
+                break
+            time.sleep(1)
+        by_user = {r.user_id: r for r in rows}
+        assert by_user[1].n_events == 2  # merged into one session
+        assert by_user[2].n_events == 1
+    finally:
+        q.stop()
+
+
+@pytest.mark.slow
+def test_stream_static_broadcast_enrichment(spark, sf_dir, tmp_path):
+    """Stream-static join: each micro-batch joins the static dimension
+    without watermarks or state (the static side re-resolves per batch).
+    The canonical enrichment shape — stream of events + dimension table."""
+    from pyspark.sql import functions as F
+
+    from spark_streaming_invoice_anomaly_detection_spark.sources.catalog import (
+        load_table,
+    )
+
+    static_dim = load_table(spark, "nation", sf_dir).select(
+        F.col("n_nationkey").alias("nat"), "n_name"
+    )
+    src = tmp_path / "in"
+    os.makedirs(src)
+    with open(src / "a.csv", "w") as f:
+        f.write("e1,0\ne2,1\ne3,0\ne4,99\n")  # 99: no dim match -> dropped
+    raw = (
+        spark.readStream.format("csv")
+        .schema("event_id string, nat int")
+        .load(str(src))
+    )
+    out: list = []
+    q = (
+        raw.join(F.broadcast(static_dim), "nat")
+        .writeStream.outputMode("append")
+        .foreachBatch(lambda df, _e: out.extend(df.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="1 seconds")
+        .start()
+    )
+    try:
+        _poll(lambda: len(out), 3)
+    finally:
+        q.stop()
+    got = {r.event_id: r.n_name for r in out}
+    assert set(got) == {"e1", "e2", "e3"}  # inner join drops the orphan
+    assert got["e2"] != got["e1"]

@@ -348,7 +348,7 @@ def test_golden_replay_reference_proportions(spark, tmp_path):
     """Each output stream's size is exact vs the plant, and the resulting
     output RATIOS match the reference's captured run within 10% — pinning
     that the pipeline's relative stream volumes track the reference, not
-    just non-emptiness (r2 VERDICT #10)."""
+    just non-emptiness."""
     from spark_streaming_invoice_anomaly_detection_spark.sources.replay import (
         PacedReplayProducer,
     )

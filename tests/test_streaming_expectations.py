@@ -84,7 +84,7 @@ def test_expectations_validate_inputs(spark):
 def test_expectations_plan_has_single_stateful_agg(spark, tmp_path):
     """The unpivot must be stateless: N checks, ONE StateStoreSave.
 
-    Round-3 advice caught the union-per-check shape planning one stateful
+    The earlier union-per-check shape planned one stateful
     windowed aggregation per expectation (3 StateStoreSave for 3 checks),
     multiplying state N-fold. Pin the fixed contract on the physical plan.
     """

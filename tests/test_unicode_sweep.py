@@ -1,8 +1,7 @@
 """Multibyte sweep: every documents-reading oracle on non-ASCII text.
 
-Round-2 ADVICE caught arrow_text_stats comparing utf8 codepoints on one
-side and bytes on the other; round-3 VERDICT #8 asks for the general
-close-out: inject genuinely adversarial Unicode (CJK, emoji + ZWJ,
+arrow_text_stats once compared utf8 codepoints on one side and bytes on
+the other; this is the general close-out: inject genuinely adversarial Unicode (CJK, emoji + ZWJ,
 combining accents, Cyrillic/Greek, RTL scripts, case-collation traps,
 multibyte duplicate pairs) into the documents fixture and drive EVERY
 registered oracle that reads the table through the full driver-style
