@@ -16,7 +16,7 @@ or saves a bigger one:
   summary that says whether a key needs salting.
 - **Bloom-reducible joins** (`bloom_reduced_join`): a plain inner
   equi-join shaped so Catalyst can inject a runtime Bloom filter into the
-  fact side; `RUNTIME_BLOOM_TEST_CONFS` lowers its size gates for tests.
+  fact side.
 
 The reference has no storage-layout surface (its only storage is MLlib
 model dirs, Clustering.scala:100-106); these are engine-side helpers, not
@@ -122,28 +122,6 @@ def key_skew_stats(df: DataFrame, key: str) -> DataFrame:
         avg_cnt.alias("avg_cnt"),
         (F.max("cnt").cast("double") / avg_cnt).alias("skew_ratio"),
     )
-
-
-# The conf levers that govern Catalyst's injected Bloom filter (a
-# `bloom_filter_agg` built on the selective build side and a
-# `might_contain(...)` predicate pushed into the large side's scan-filter).
-# Injection is on by default but gated by size thresholds tuned for real
-# clusters: the build side must be under creationSideThreshold (default
-# 10 MB) and the probe side's scan over applicationSideScanSizeThreshold
-# (default 10 GB). At 100 TB a lineitem ⋈ σ(orders) join crosses both
-# gates naturally; at test SF nothing does, so plan tests lower the
-# application-side gate to 0 to pin the injected-filter shape.
-RUNTIME_BLOOM_TEST_CONFS: dict[str, str] = {
-    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-    # let any build side qualify at test scale
-    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
-    # probe side is tiny at test SF; drop the 10 GB gate so the filter
-    # actually injects and the plan assertion is meaningful
-    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-    # bloom reduction only applies to shuffle joins — a broadcast join
-    # already prunes at the probe; force the at-scale join strategy
-    "spark.sql.autoBroadcastJoinThreshold": "-1",
-}
 
 
 def bloom_reduced_join(

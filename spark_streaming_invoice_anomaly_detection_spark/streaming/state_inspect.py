@@ -9,6 +9,8 @@ module wraps both plus the diagnostic a stateful deployment actually
 runs: a skew/leak census of the keyed state behind the invoice
 sessionizer (streaming/session_state.py) — "how many sessions are open,
 how are they spread over partitions, is one reducer holding the bag".
+The sessionizer keys its state by hash bucket, so the census counts the
+open invoices each bucket row holds, not the rows.
 
 All reads are offline (no running query needed) and scan only the
 checkpoint's state files — at 100 TB of stream history the cost is
@@ -17,8 +19,9 @@ proportional to LIVE state, not to everything that ever flowed through.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def state_operator_metadata(spark: SparkSession, checkpoint: str) -> DataFrame:
@@ -45,21 +48,31 @@ def read_state(
     return r.load(checkpoint)
 
 
+def _sessions_per_row(state: DataFrame) -> Column:
+    """Open sessions one state row holds: the length of the invoice array
+    for the sessionizer's bucket rows, 1 for any other keyed state."""
+    value = state.schema["value"].dataType
+    group = value["groupState"].dataType if "groupState" in value.fieldNames() else None
+    if isinstance(group, T.StructType) and "invoice_nos" in group.fieldNames():
+        return F.size("value.groupState.invoice_nos")
+    return F.lit(1)
+
+
 def state_census(
     spark: SparkSession, checkpoint: str, operator_id: int = 0
 ) -> DataFrame:
     """One-row health summary of an operator's keyed state:
 
-    ``n_keys`` (live sessions), ``n_partitions_used``, ``max_partition
-    _keys``, and ``skew_ratio`` = max / mean over USED partitions (1.0 =
-    perfectly spread; >> 1 = one reducer holds the bag). The leak check
-    is ``n_keys`` itself watched over time — a sessionizer whose expiry
+    ``n_keys`` (live sessions: open invoices for the sessionizer, state
+    rows otherwise), ``n_partitions_used``, ``max_partition_keys``, and
+    ``skew_ratio`` = max / mean over USED partitions (1.0 = perfectly
+    spread; >> 1 = one reducer holds the bag). The leak check is
+    ``n_keys`` itself watched over time — a sessionizer whose expiry
     works holds O(active sessions), not O(history).
     """
-    per_part = (
-        read_state(spark, checkpoint, operator_id=operator_id)
-        .groupBy("partition_id")
-        .agg(F.count(F.lit(1)).alias("n"))
+    state = read_state(spark, checkpoint, operator_id=operator_id)
+    per_part = state.groupBy("partition_id").agg(
+        F.sum(_sessions_per_row(state)).alias("n")
     )
     # coalesce: an EMPTY store (all sessions expired) must read n_keys=0
     # and skew_ratio=1.0 (perfectly spread, vacuously), not a row of NULLs

@@ -61,6 +61,28 @@ class TestSaltedJoin:
         assert n_groups == 8
 
 
+# The conf levers that govern Catalyst's injected Bloom filter (a
+# `bloom_filter_agg` built on the selective build side and a
+# `might_contain(...)` predicate pushed into the large side's scan-filter).
+# Injection is on by default but gated by size thresholds tuned for real
+# clusters: the build side must be under creationSideThreshold (default
+# 10 MB) and the probe side's scan over applicationSideScanSizeThreshold
+# (default 10 GB). At 100 TB a lineitem ⋈ σ(orders) join crosses both
+# gates naturally; at test SF nothing does, so the plan test lowers the
+# application-side gate to 0 to pin the injected-filter shape.
+RUNTIME_BLOOM_TEST_CONFS: dict[str, str] = {
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    # let any build side qualify at test scale
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
+    # probe side is tiny at test SF; drop the 10 GB gate so the filter
+    # actually injects and the plan assertion is meaningful
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+    # bloom reduction only applies to shuffle joins — a broadcast join
+    # already prunes at the probe; force the at-scale join strategy
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
+
+
 class TestRuntimeBloomFilter:
     def test_injected_filter_shape_and_identity(self, spark, sf_dir):
         """With the at-scale size gates lowered, Catalyst injects a
@@ -80,10 +102,10 @@ class TestRuntimeBloomFilter:
 
         saved = {
             k: spark.conf.get(k, None)
-            for k in layout.RUNTIME_BLOOM_TEST_CONFS
+            for k in RUNTIME_BLOOM_TEST_CONFS
         }
         try:
-            for k, v in layout.RUNTIME_BLOOM_TEST_CONFS.items():
+            for k, v in RUNTIME_BLOOM_TEST_CONFS.items():
                 spark.conf.set(k, v)
             df = builder(spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()

@@ -17,7 +17,8 @@ def _write_lines(src, name, lines):
 @pytest.mark.slow
 def test_sessionizer_state_is_readable_offline(spark, tmp_path):
     """Open (un-expired) invoices are visible in the checkpoint after the
-    query stops; the census sees exactly those keys."""
+    query stops; the census counts exactly those invoices (state rows are
+    hash buckets, each holding its open invoices)."""
     from spark_streaming_invoice_anomaly_detection_spark.streaming.pipeline import (
         build_invoice_stream,
     )
@@ -34,7 +35,7 @@ def test_sessionizer_state_is_readable_offline(spark, tmp_path):
         "b0.txt",
         [
             "536365,85123A,ITEM,6,12/1/2010 8:26,2.55,17850,United Kingdom",
-            "536366,84406B,OTHER,3,12/1/2010 8:28,2.75,17850,United Kingdom",
+            "536370,84406B,OTHER,3,12/1/2010 8:28,2.75,17850,United Kingdom",
         ],
     )
     raw = spark.readStream.format("text").load(str(src))
@@ -66,8 +67,10 @@ def test_sessionizer_state_is_readable_offline(spark, tmp_path):
     assert meta[0]["operatorName"] == "applyInPandasWithState"
 
     st = read_state(spark, ckpt).collect()
-    keys = sorted(r["key"]["invoice_no"] for r in st)
-    assert keys == ["536365", "536366"]
+    keys = sorted(no for r in st for no in r["value"]["groupState"]["invoice_nos"])
+    assert keys == ["536365", "536370"]
+    # both hash to bucket 28 of 64: one state row holds the two invoices
+    assert len(st) == 1
 
     census = state_census(spark, ckpt).first()
     assert census["n_keys"] == 2

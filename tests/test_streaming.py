@@ -105,15 +105,17 @@ def _run_session_stream(spark, tmp_path, batches, trigger_s=1, expiry_ticks=2):
     """Feed line batches through file-source -> sessionize -> memory sink.
 
     Each element of ``batches`` is a list of raw lines written as one file
-    (one micro-batch); batches are spaced by polling the sink, and expiry
-    happens via the operator's own processing-time timeout.
+    (one micro-batch); the next file lands once ``recentProgress`` shows
+    the previous one was read, and expiry happens via the operator's own
+    processing-time timeout.
     """
     from spark_streaming_invoice_anomaly_detection_spark.streaming.pipeline import (
         build_invoice_stream,
     )
 
-    src = tmp_path / "in"
+    src, staging = tmp_path / "in", tmp_path / "staging"
     os.makedirs(src, exist_ok=True)
+    os.makedirs(staging, exist_ok=True)
     raw = spark.readStream.format("text").load(str(src))
     out_name = f"sessions_{abs(hash(str(tmp_path))) % 10**8}"
     q = (
@@ -125,11 +127,20 @@ def _run_session_stream(spark, tmp_path, batches, trigger_s=1, expiry_ticks=2):
         .start()
     )
     try:
+        n_read = 0
         for i, lines in enumerate(batches):
-            with open(src / f"batch_{i}.txt", "w") as f:
+            with open(staging / f"batch_{i}.txt", "w") as f:
                 f.write("\n".join(lines) + "\n")
-            # space out micro-batches so each file lands in its own batch
-            time.sleep(trigger_s * 2)
+            os.rename(staging / f"batch_{i}.txt", src / f"batch_{i}.txt")
+            # one file per micro-batch: the next lands once this one was
+            # read, well before this one's invoices can expire (n + 2)
+            n_read += len(lines)
+            _poll(
+                lambda: sum(p["numInputRows"] for p in q.recentProgress),
+                n_read,
+                deadline_s=60,
+                interval=0.2,
+            )
         expected = len({ln.split(",")[0] for batch in batches for ln in batch})
         _poll(
             lambda: spark.sql(f"SELECT count(*) FROM {out_name}").first()[0],
@@ -186,14 +197,17 @@ class TestSessionization:
 # ---------------------------------------------------------------------------
 
 
-def _tick_run(spark, tmp_path, first, follow_up=(), sink_sleep_s=0.0, expiry_ticks=2):
+def _tick_run(
+    spark, tmp_path, first, follow_up=(), sink_sleep_s=0.0, expiry_ticks=2, rows=None
+):
     """Run the sessionizer with a 1 s trigger into a foreachBatch sink.
 
     ``first`` is in the source before the query starts, so batch 0 reads
     it; the sink writes ``follow_up`` into the source while epoch 0 runs,
     so batch 1 reads it. The sink sleeps ``sink_sleep_s`` on every epoch.
     Returns ({batch id: input rows} from ``recentProgress``,
-    {invoice_no: emitting epoch}, {batch id: triggerExecution ms}).
+    {invoice_no: emitting epoch}, {batch id: triggerExecution ms}); a
+    ``rows`` dict, if given, receives {invoice_no: emitted Row}.
     """
     from spark_streaming_invoice_anomaly_detection_spark.streaming.pipeline import (
         build_invoice_stream,
@@ -211,8 +225,10 @@ def _tick_run(spark, tmp_path, first, follow_up=(), sink_sleep_s=0.0, expiry_tic
     emitted = {}
 
     def sink(df, epoch_id):
-        for r in df.select("invoice_no").collect():
+        for r in df.collect():
             emitted[r.invoice_no] = epoch_id
+            if rows is not None:
+                rows[r.invoice_no] = r
         if epoch_id == 0 and follow_up:
             land("b1.txt", follow_up)
         time.sleep(sink_sleep_s)
@@ -273,6 +289,178 @@ class TestExpiryTick:
         )
         assert reads == {0: 3, 1: 2}
         assert emitted == {"536365": 3, "536366": 2, "536368": 3}
+
+    def test_invoices_sharing_a_bucket_keep_separate_clocks(self, spark, tmp_path):
+        # 200 invoices read in batch 0 and 200 others in batch 1 share the
+        # sessionizer's hash buckets (pigeonhole), yet each is emitted at
+        # its own reading batch + 2
+        from spark_streaming_invoice_anomaly_detection_spark.streaming.session_state import (
+            BUCKETS,
+        )
+
+        def line(no, customer="17850", hour=9):
+            return f"{no},x,y,2,12/1/2010 {hour}:00,1.5,{customer},UK"
+
+        first_nos = [str(610000 + i) for i in range(200)]
+        later_nos = [str(620000 + i) for i in range(200)]
+        # 610000's first line lacks a customer, its second has one
+        first = [line(first_nos[0], customer="", hour=8)]
+        first += [line(no) for no in first_nos]
+        later = [line(no) for no in later_nos]
+
+        bucket = F.pmod(F.xxhash64("no"), F.lit(BUCKETS))
+        buckets = [
+            {r[0] for r in spark.createDataFrame([(n,) for n in nos], "no string")
+             .select(bucket).collect()}
+            for nos in (first_nos, later_nos)
+        ]
+        assert buckets[0] & buckets[1]
+
+        rows = {}
+        reads, emitted, _ = _tick_run(spark, tmp_path, first, follow_up=later, rows=rows)
+        assert reads == {0: 201, 1: 200}
+        assert emitted == {**{no: 2 for no in first_nos}, **{no: 3 for no in later_nos}}
+        # "first" means the first line, nulls included
+        inv = rows[first_nos[0]]
+        assert inv.lines == 2
+        assert inv.customer_id is None
+        assert inv.has_missing_customer
+        assert inv.time == 8.0
+
+
+# ---------------------------------------------------------------------------
+# Bucket fold (T2) against the reference's per-invoice line buffer, no query
+# ---------------------------------------------------------------------------
+
+_PURCHASE_COLS = [
+    "invoice_no", "quantity", "invoice_date", "unit_price", "customer_id",
+    "country", "error_reason",
+]
+
+
+def _drive_bucket(batches, expiry_ticks=2, tick_ms=500):
+    """Feed PURCHASE row batches, all one bucket, through the update
+    function as the state operator would: a batch every 2 x ``tick_ms``,
+    a timed-out call when the state's timeout is due and no rows came,
+    each batch's rows in two chunks. Returns the emitted rows without
+    ``last_updated`` as (emitting batch, row), ordered."""
+    import json
+
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    from spark_streaming_invoice_anomaly_detection_spark.streaming.session_state import (
+        STATE_SCHEMA,
+        make_update_fn,
+    )
+
+    update = make_update_fn(tick_ms, expiry_ticks)
+    value, timeout, out = None, -1, []
+    for b, rows in enumerate([*batches, *[[]] * (expiry_ticks + 1)]):
+        now = 1_000_000 + b * 2 * tick_ms
+        timed_out = not rows and value is not None and timeout < now
+        if not rows and not timed_out:
+            continue
+        state = GroupState(
+            optionalValue=value, batchProcessingTimeMs=now, eventTimeWatermarkMs=-1,
+            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout, hasTimedOut=timed_out,
+            watermarkPresent=False, defined=value is not None, updated=False,
+            removed=False, timeoutTimestamp=timeout, keyAsUnsafe=b"",
+            valueSchema=STATE_SCHEMA,
+        )
+        pdf = pd.DataFrame(rows, columns=_PURCHASE_COLS)
+        chunks = [pdf.iloc[: len(rows) // 2], pdf.iloc[len(rows) // 2 :]] if rows else []
+        for emitted in update((0,), iter(chunks), state):
+            for r in emitted.to_dict("records"):
+                del r["last_updated"]
+                out.append((b, {k: None if v != v else v for k, v in r.items()}))  # NaN -> None
+        value = STATE_SCHEMA.toInternal(state.get) if state.exists else None
+        timeout = json.loads(state.json())["timeoutTimestamp"]
+    return sorted(out, key=lambda e: (e[0], e[1]["invoice_no"]))
+
+
+def _reference_invoices(batches, expiry_ticks=2):
+    """``toInvoice`` over each invoice's whole line buffer, as the
+    reference kept it (InvoicePipeline.scala:192-252, 472-492): a batch
+    with a parse error for the invoice stores the reason and drops that
+    batch's goods, and a buffer with no event for ``expiry_ticks`` batches
+    is emitted, so a later line for its number opens a new one. Returns
+    the same shape as ``_drive_bucket``."""
+
+    def hour(d):
+        try:
+            return float(d.split(" ")[1].split(":")[0])
+        except Exception:
+            return -1.0
+
+    def emit(no, buf):
+        ls = buf["lines"]
+        n, prices = len(ls), [r[3] for r in ls]
+        return (buf["last"] + expiry_ticks, {
+            "invoice_no": no,
+            "avg_unit_price": sum(prices) / n if n else None,
+            "min_unit_price": min(prices) if n else None,
+            "max_unit_price": max(prices) if n else None,
+            "time": hour(ls[0][2]) if n else None,
+            "number_items": float(sum(r[1] for r in ls)) if n else None,
+            "lines": n,
+            "customer_id": ls[0][4] if n else None,
+            "error_reason": buf["error"],
+            "has_missing_customer": any(not r[4] for r in ls),
+            "has_invalid_date": any(hour(r[2]) < 0 for r in ls),
+            "has_missing_country": any(not r[5] for r in ls),
+        })
+
+    buffers, out = {}, []
+    for b, rows in enumerate(batches):
+        mine = {}
+        for r in rows:
+            mine.setdefault(r[0], []).append(r)
+        for no, rs in mine.items():
+            if no in buffers and b > buffers[no]["last"] + expiry_ticks:
+                out.append(emit(no, buffers.pop(no)))
+            buf = buffers.setdefault(no, {"lines": [], "error": None})
+            buf["last"] = b
+            errors = [r[6] for r in rs if r[6] is not None]
+            if errors:
+                buf["error"] = errors[0]
+            else:
+                buf["lines"] += rs
+    out += [emit(no, buf) for no, buf in buffers.items()]
+    return sorted(out, key=lambda e: (e[0], e[1]["invoice_no"]))
+
+
+def test_bucket_fold_matches_reference_line_buffer():
+    import random
+
+    rng = random.Random(7)
+    batches = []
+    for b in range(6):
+        rows = []  # batches 2 and 3 are empty: batch 4 reopens expired numbers
+        for _ in range(rng.randint(20, 50) if b not in (2, 3) else 0):
+            no = str(900000 + rng.randint(0, 30))
+            date = rng.choice(["12/1/2010 8:26", "12/1/2010 17:05", "baddate", None])
+            customer = rng.choice(["17850", "13047", "", None])
+            country = rng.choice(["United Kingdom", "France", None])
+            if rng.random() < 0.15:
+                bad = rng.choice(["x", "2.5", "six"])
+                rows.append((no, None, date, 2.55, customer, country,
+                             f"parse error: invalid quantity '{bad}'"))
+            else:
+                rows.append((no, rng.randint(-2, 24), date,
+                             rng.uniform(0.1, 60.0), customer, country, None))
+        batches.append(rows)
+    # two different parse errors and a good line for one invoice in one
+    # batch: the first reason wins and the good line is dropped
+    batches[0] += [
+        ("900099", None, "12/1/2010 8:26", 2.55, "17850", "France",
+         f"parse error: invalid quantity '{bad}'") for bad in ("x", "six")
+    ] + [("900099", 3, "12/1/2010 8:26", 2.55, "17850", "France", None)]
+    want = _reference_invoices(batches)
+    assert any(row["lines"] == 0 for _, row in want)
+    assert any(row["error_reason"] and row["lines"] for _, row in want)
+    assert len({row["invoice_no"] for _, row in want}) < len(want)  # reopened
+    assert _drive_bucket(batches) == want
 
 
 # ---------------------------------------------------------------------------
